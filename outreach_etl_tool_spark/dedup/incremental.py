@@ -66,98 +66,3 @@ def incremental_exact(
         .select(id_col, "text_sha")
     )
 
-
-# --------------------------------------------------------------- near-dup
-def minhash_store(
-    history: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 32,
-    k: int = 3,
-) -> DataFrame:
-    """The near-dup signature store: (id, sig) per retained document.
-    Built once, appended per batch — at rest it is written bucketed by
-    band key so incremental probes co-locate. Signatures are a few
-    hundred bytes per document regardless of document size; the store
-    for a 10^11-doc corpus is ~10 TB of longs, not 100 TB of text."""
-    from .minhash import minhash_signature
-
-    return history.select(
-        F.col(id_col).alias("id"),
-        minhash_signature(F.col(text_col), num_hashes, k).alias("sig"),
-    ).filter(F.col("sig").isNotNull())
-
-
-def _band_keys(sig_df: DataFrame, num_hashes: int, bands: int) -> DataFrame:
-    rows = num_hashes // bands
-    return sig_df.select(
-        "id",
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(F.slice("sig", b * rows + 1, rows)).alias("bkey"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("id", "sig", "bk.band", "bk.bkey")
-
-
-def incremental_minhash(
-    new_batch: DataFrame,
-    store: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 32,
-    k: int = 3,
-    bands: int = 8,
-    jaccard_threshold: float = 0.5,
-) -> DataFrame:
-    """Near-duplicate NEW-batch docs against an existing corpus WITHOUT
-    touching historical text: ``store`` holds only (id, sig) from
-    :func:`minhash_store`.
-
-    Candidates come from band-key agreement (new-batch keys probe the
-    store's band index — at rest a bucket-pruned join, never a scan of
-    history); verification estimates Jaccard from SIGNATURE AGREEMENT
-    (fraction of matching minhash positions — the unbiased estimator
-    E[match] = J), so no historical shingles are recomputed. The
-    estimate's σ = √(J(1−J)/H): with H=128+ the threshold cut is sharp
-    enough for curation; exact re-rank against stored text remains
-    possible where the store keeps it.
-
-    Returns ``(new_id, dup_of, est_jaccard)`` — new docs with at least
-    one near-dup in history (new-vs-new dups are the batch's own
-    ``candidate_pairs`` run; this operator is the history leg).
-    """
-    if num_hashes % bands:
-        raise ValueError("bands must divide num_hashes")
-    new_sigs = minhash_store(new_batch, id_col, text_col, num_hashes, k)
-    nb = _band_keys(new_sigs, num_hashes, bands).select(
-        F.col("id").alias("new_id"), F.col("sig").alias("new_sig"),
-        "band", "bkey",
-    )
-    hb = _band_keys(store, num_hashes, bands).select(
-        F.col("id").alias("dup_of"), F.col("sig").alias("old_sig"),
-        "band", "bkey",
-    )
-    cand = (
-        nb.join(hb, ["band", "bkey"])
-        .select("new_id", "dup_of", "new_sig", "old_sig")
-        .dropDuplicates(["new_id", "dup_of"])
-    )
-    matches = F.zip_with(
-        "new_sig", "old_sig", lambda a, b: (a == b).cast("int")
-    )
-    est = F.aggregate(
-        matches, F.lit(0), lambda acc, x: acc + x
-    ).cast("double") / F.lit(num_hashes)
-    return (
-        cand.withColumn("est_jaccard", est)
-        .filter(F.col("est_jaccard") >= jaccard_threshold)
-        .select("new_id", "dup_of", "est_jaccard")
-    )

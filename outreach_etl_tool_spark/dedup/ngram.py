@@ -14,7 +14,7 @@ explode pairs → groupBy pair, exactly two shuffles whose payload is
 (shingle, id) tuples, not duplicated left/right copies. Pair blow-up
 on a low-entropy corpus (a shingle shared by n docs emits n²/2 rows)
 is inherent to EXACT jaccard in any formulation — this is the
-verification/small-partition tool; MinHash (minhash.py) is the scale
+verification/small-partition tool; MinHash (parity.py) is the scale
 path. A `partition_col` restricts pairs to the same partition (e.g.
 `source`), which is also how a 100 TB run would shard it.
 """
@@ -43,7 +43,7 @@ def jaccard_pairs(
     shared by n docs builds an n-element aggregation buffer and then
     emits ~n²/2 pairs from ONE row (single-row skew; at n=10⁶ that is
     5·10¹¹ pairs and a >2 GB record). Exact Jaccard forbids silently
-    dropping members — bucket_pairs-style capping would change the
+    dropping members — LSH-style bucket capping would change the
     answer — so past the guard the query FAILS with the remediations
     spelled out (shard with partition_col, raise k, or use the MinHash
     scale path). None disables the guard.

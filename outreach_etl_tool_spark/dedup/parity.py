@@ -5,14 +5,15 @@ hash-equality gate can certify the pair output instead of recording a
 rows-only run (SURVEY.md §2.10 L2; reference parity: the pandas
 reference has no near-dedup at all — this is EXT surface).
 
-Design deltas vs dedup/minhash.py + dedup/simhash.py (kept for the
-kernel-benchmark path and the incremental signature store):
+This is the engine's one MinHash, SimHash and SRP-embedding LSH
+implementation; every registry dedup op and the streaming near-dup
+sink run it. Design points:
 
 * Base hash = integer prefix of md5 (``conv(substr(md5(x),1,n),16,10)``
   / ``('0x' || substr(md5(x),1,n))::BIGINT``) — bit-identical in Spark
-  and DuckDB, unlike FNV-over-utf8 numpy kernels, and computed
-  JVM-side AFTER an explode so it stays inside whole-stage codegen
-  (no interpreted higher-order chain, no Arrow round-trip).
+  and DuckDB, and computed JVM-side AFTER an explode so it stays
+  inside whole-stage codegen (no interpreted higher-order chain, no
+  Arrow round-trip).
 * Affine minhash maps use 30-bit constants on 28-bit base hashes:
   every intermediate fits comfortably in a signed 64-bit integer, so
   Spark BIGINT and DuckDB BIGINT arithmetic agree exactly — no mod-2^64
@@ -22,15 +23,14 @@ kernel-benchmark path and the incremental signature store):
   per (doc × partition), not per token. That is the property that
   makes this formulation scale-legitimate rather than a test-only
   shim: at 10^11 docs the shuffle is signature-bytes, and the band
-  self-join is keyed by 4-minhash band keys exactly like the kernel
-  path.
+  self-join is keyed by 4-minhash band keys.
 * The bucket cap (deterministic ascending-id truncation of degenerate
   buckets) is expressed as ``row_number() <= cap`` over (band, key) —
   the same kept-subset as ``list_slice(list_sort(ids), 1, cap)`` —
   and mirrored verbatim in the oracle.
 
-Recall notes: SimHash banding at max_hamming=3 over 32 bits with 4
-8-bit bands is EXHAUSTIVE by pigeonhole (<=3 differing bits cannot
+Recall notes: SimHash banding at max_hamming=3 over 60 bits with 4
+15-bit bands is EXHAUSTIVE by pigeonhole (<=3 differing bits cannot
 touch all 4 bands), so the output is exactly the Hamming-<=3 pair set
 (modulo capped degenerate buckets, mirrored). MinHash banding is the
 standard probabilistic recall curve; with pinned constants the
@@ -67,8 +67,8 @@ def _mh_constants() -> tuple[list[int], list[int]]:
 
 _MH_A, _MH_B = _mh_constants()
 
-# 60-bit fingerprint (15 md5 hex chars): close to the kernel path's
-# 64-bit tightness — Hamming<=3 of 60 is a near-dup gate, of 32 it
+# 60-bit fingerprint (15 md5 hex chars): close to a 64-bit simhash's
+# tightness — Hamming<=3 of 60 is a near-dup gate, of 32 it
 # would be a loose similarity gate (measured 725 vs ~17 pairs at
 # sf0.01) — while still fitting signed-64 arithmetic in both engines
 _SH_BITS = 60
@@ -131,6 +131,11 @@ def _mh_banded(sig: DataFrame) -> DataFrame:
     ).select("id", "bk.band", "bk.key")
 
 
+def _mh_candidates(sh: DataFrame) -> DataFrame:
+    """Unverified (id_a < id_b) LSH candidates from a shingle frame."""
+    return _banded_pairs(_mh_banded(_mh_signature(sh)))
+
+
 def minhash_pairs_parity(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     threshold_num: int = 2, threshold_den: int = 5,
@@ -152,8 +157,7 @@ def minhash_pairs_parity(
     # pass for two full recomputes of the most expensive expression in
     # the pipeline.
     sh = _mh_shingle_frame(df, id_col, text_col).localCheckpoint()
-    banded = _mh_banded(_mh_signature(sh))
-    cands = _banded_pairs(banded)
+    cands = _mh_candidates(sh)
     va = cands.join(
         sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sa")), "id_a"
     ).join(
@@ -181,10 +185,10 @@ def minhash_pairs_parity(
 def _capped_buckets(banded: DataFrame) -> DataFrame:
     """The deterministic degenerate-bucket cap: only the first _CAP
     ids (ascending) of each (band, key) bucket participate —
-    `row_number() <= cap` ≡ the sorted-slice cap of
-    dedup/minhash.bucket_pairs, and the exact shape the oracle
-    mirrors.  localCheckpoint: the relation feeds both sides of the
-    bucket join (setsim discipline — one evaluation, not two)."""
+    `row_number() <= cap` ≡ ``list_slice(list_sort(ids), 1, cap)``
+    per bucket, and the exact shape the oracle mirrors.
+    localCheckpoint: the relation feeds both sides of the bucket join
+    (setsim discipline — one evaluation, not two)."""
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("band", "key").orderBy("id")
@@ -283,13 +287,13 @@ ORDER BY id_a, id_b
 def simhash_pairs_parity(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """Pairs (id_a < id_b) with Hamming(simhash32) <= 3 — EXHAUSTIVE
-    by pigeonhole over the 4x8-bit bands (modulo the mirrored bucket
+    """Pairs (id_a < id_b) with Hamming(simhash60) <= 3 — EXHAUSTIVE
+    by pigeonhole over the 4x15-bit bands (modulo the mirrored bucket
     cap), so the output is exactly the Hamming-ball pair set and the
     oracle is a full replica, not a containment check.
 
-    Token-frequency-weighted bit votes (ties -> 0 bit), 32-bit md5
-    prefix per token; the vote accumulation is one groupBy with 32
+    Token-frequency-weighted bit votes (ties -> 0 bit), 60-bit md5
+    prefix per token; the vote accumulation is one groupBy with 60
     conditional SUMs — map-side combinable, fingerprint-sized
     exchange, zero Python."""
     df = ensure_parallelism(df)

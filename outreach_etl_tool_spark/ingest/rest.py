@@ -91,11 +91,19 @@ def fetch_window(
     page_size: int = 100,
     max_retries: int = 3,
 ) -> list[dict[str, Any]]:
-    """All records in [lo, hi), flattened — page 1 included (bug #1)."""
+    """All records in [lo, hi), flattened — page 1 included (bug #1).
+    A ``next`` cursor the API already returned raises ``FetchError``:
+    following it again would page forever."""
     params = window_params(lo, hi, page_size)
     page = _fetch_retry(fetcher, endpoint, params, max_retries)
     records = [flatten_record(r) for r in page.data]
+    seen: set[str] = set()
     while page.next_token is not None:
+        if page.next_token in seen:
+            raise FetchError(
+                f"{endpoint}: repeated next cursor {page.next_token!r}"
+            )
+        seen.add(page.next_token)
         page = _fetch_retry(
             fetcher, endpoint, {**params, "page[next]": page.next_token}, max_retries
         )

@@ -1,9 +1,10 @@
 """LLM-training-data pipeline queries (SURVEY.md §2.10 L1-L5): dedup
 family, similarity search, text analysis, multimodal metadata.
 
-Oracle-able queries carry exact DuckDB SQL; the probabilistic
-operators (MinHash/SimHash/LSH) are rows-only here and get recall
-tests against exact baselines in tests/.
+Oracle-able queries carry exact DuckDB SQL — the MinHash/SimHash/SRP
+near-dup ops too, through the md5-prefix formulation of
+dedup/parity.py; their recall is tested against exact baselines in
+tests/.
 """
 
 from __future__ import annotations
@@ -13,9 +14,8 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.expr import bind_once
-from ..dedup import embedding as emb_dedup
 from ..dedup import exact as exact_dedup
-from ..dedup import minhash, ngram, simhash
+from ..dedup import ngram
 from ..functions import text as TXT
 from ..functions.scalars import avg_sql, exact_avg
 from ..functions.vectors import cosine, dot
@@ -148,8 +148,7 @@ GROUP BY source
 # Round 8: oracle-parity formulation (dedup/parity.py) — with the
 # md5-prefix signature the estimator IS the oracle's arithmetic, so
 # the previously "no SQL mirror" estimation is now a full replica
-# (an integer agreement count / 32). The FNV signature-store path
-# stays in dedup/incremental.py with its unit tests.
+# (an integer agreement count / 32).
 def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..dedup import parity
 
@@ -359,8 +358,7 @@ ORDER BY source, lang
 # of a rows-only run. Same operator contract as rounds 2-7 (k=3
 # shingles, 32 hashes, 8 bands, exact-verified Jaccard >= 0.4); only
 # the seeded hash family changed — which pairs get LSH candidates may
-# shift at the recall margin, and the FNV kernel path remains exercised
-# via dedup_incremental_minhash + dedup/minhash.py's unit/recall tests.
+# shift at the recall margin.
 def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..dedup import parity
 
@@ -507,7 +505,7 @@ def dedup_split_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (32-bit md5-prefix token hashes, frequency-weighted bit votes, 4x8
 # bands). Banding at max_hamming=3 < 4 bands is pigeonhole-EXHAUSTIVE,
 # so the output is exactly the Hamming<=3 pair set and the oracle is a
-# full replica. The 64-bit FNV kernel path stays in dedup/simhash.py.
+# full replica.
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..dedup import parity
 
@@ -632,7 +630,6 @@ WHERE LEN(a.sh) > 0 AND LEN(b.sh) > 0
 # floor-quantized to 1e-6, integer hyperplanes, exact-integer τ-gate —
 # so sign decisions cannot diverge between numpy and SQL float
 # summation orders and the driver's hash gate certifies the pairs.
-# The float-SRP kernel path stays in dedup/embedding.py (recall tests).
 def emb_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..dedup import parity
 
@@ -2862,8 +2859,8 @@ def _winnow_screen_ids(eligible: DataFrame) -> DataFrame:
     identical hash sequences under any content-determined hash, so
     the common-fingerprint argument above is hash-function-agnostic.
 
-    Implementation note: this is the span family's one Arrow kernel
-    (minhash.py discipline).  The pure-expression alternative
+    Implementation note: this is the span family's one Arrow kernel.
+    The pure-expression alternative
     (transform/slice/array_min over per-position structs) is
     CodegenFallback — Spark interprets higher-order-function lambdas
     per element, ~W boxed comparisons per character — measured 2-5×

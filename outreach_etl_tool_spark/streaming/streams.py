@@ -941,7 +941,7 @@ def neardup_ingest_sink(
     dropped — retention is the reader's choice (the
     decontaminate-ingest convention). In-batch near-dups are
     deliberately out of scope: the batch's own candidate-pairs run
-    covers them (the incremental_minhash contract).
+    covers them (the dedup_incremental_minhash contract).
 
     Per-batch cost is O(batch), NOT O(store): the store is persisted
     in BANDED layout — (id, band, key, s0..s31) rows, signatures

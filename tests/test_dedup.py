@@ -9,8 +9,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from outreach_etl_tool_spark.dedup import embedding as emb_dedup
-from outreach_etl_tool_spark.dedup import exact, minhash, ngram, simhash
+from outreach_etl_tool_spark.dedup import exact, minhash, ngram, parity
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the sun sets "
@@ -56,26 +55,20 @@ def test_exact_dedup_idempotent(spark, docs):
 
 # ------------------------------------------------------------ MinHash
 def test_minhash_finds_near_and_exact_dups(spark, docs):
-    got = pairs(minhash.candidate_pairs(docs, "doc_id", "text",
-                                        jaccard_threshold=0.5))
-    assert (1, 4) in got          # identical text
-    assert (1, 2) in got          # one-token edit
-    assert all(3 not in p for p in got)  # unrelated never pairs
-
-
-def test_minhash_signature_shape(spark, docs):
-    sig = docs.select(
-        minhash.minhash_signature("text", num_hashes=16).alias("s")
-    ).collect()
-    assert all(len(r["s"]) == 16 for r in sig)
-
-
-def test_minhash_signature_null_for_empty_doc(spark):
-    df = spark.createDataFrame([(1, "only words here"), (2, "!!! 123 ...")],
-                               "doc_id long, text string")
-    got = {r["doc_id"]: r["s"] for r in df.select(
-        "doc_id", minhash.minhash_signature("text").alias("s")).collect()}
-    assert got[1] is not None and got[2] is None
+    """``minhash.candidate_pairs`` — the LSH stage the registry MinHash
+    verifies, and the benchmark's candidate count — proposes the
+    identical and one-token-edit pairs but not the unrelated doc,
+    returns distinct (id_a < id_b) pairs, and contains every pair the
+    registry MinHash reports, since its exact verify only filters."""
+    cand = [(r["id_a"], r["id_b"])
+            for r in minhash.candidate_pairs(docs).collect()]
+    assert len(cand) == len(set(cand))
+    assert all(a < b for a, b in cand)
+    assert (1, 4) in cand         # identical text
+    assert (1, 2) in cand         # one-token edit
+    assert all(3 not in p for p in cand)  # unrelated never pairs
+    verified = pairs(parity.minhash_pairs_parity(docs, "doc_id", "text"))
+    assert verified and verified <= set(cand)
 
 
 def test_shingles_short_and_empty_docs(spark):
@@ -89,43 +82,24 @@ def test_shingles_short_and_empty_docs(spark):
     assert got[3] == ["x"]
 
 
-def test_minhash_short_doc_at_batch_tail(spark):
-    """Regression: a <k-token doc FOLLOWING a longer doc in the same
-    Arrow batch used to IndexError — its whole-doc shingle position
-    sits past the m-1 full-window bound of the flat shingle buffer."""
-    df = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon"), (2, "tail pair")],
-        "doc_id long, text string",
-    ).coalesce(1)  # same batch, short doc last
-    got = {r["doc_id"]: r["s"] for r in df.select(
-        "doc_id", minhash.minhash_signature("text", num_hashes=8).alias("s")
-    ).collect()}
-    assert len(got[1]) == 8 and len(got[2]) == 8
-    # short doc alone in its own batch must produce the SAME signature
-    alone = spark.createDataFrame([(2, "tail pair")], "doc_id long, text string")
-    got_alone = alone.select(
-        minhash.minhash_signature("text", num_hashes=8).alias("s")
-    ).collect()[0]["s"]
-    assert got[2] == got_alone
-
-
 def test_minhash_short_docs_pair_detected(spark):
     """Two identical short docs (< k tokens) sharing a batch with long
-    docs must come out as an exact-Jaccard-1.0 candidate pair."""
+    docs must come out as an exact-Jaccard-1.0 pair."""
     df = spark.createDataFrame(
         [(1, BASE), (2, "tiny doc"), (3, FAR), (4, "tiny doc")],
         "doc_id long, text string",
     ).coalesce(1)
-    got = pairs(minhash.candidate_pairs(df, "doc_id", "text",
-                                        jaccard_threshold=0.9))
+    got = pairs(parity.minhash_pairs_parity(df, "doc_id", "text",
+                                            threshold_num=9, threshold_den=10))
     assert (2, 4) in got
 
 
 def test_minhash_identical_signatures_for_identical_text(spark, docs):
-    sig = docs.filter(F.col("doc_id").isin(1, 4)).select(
-        minhash.minhash_signature("text").alias("s")
-    ).collect()
-    assert sig[0]["s"] == sig[1]["s"]
+    sh = parity._mh_shingle_frame(docs, "doc_id", "text")
+    sig = {r["id"]: r[1:] for r in parity._mh_signature(sh).collect()}
+    assert len(sig[1]) == parity._MH_NUM
+    assert sig[1] == sig[4]
+    assert sig[1] != sig[3]
 
 
 # -------------------------------------------------------- incremental L1
@@ -165,51 +139,33 @@ def test_incremental_exact_store_append_idempotent(spark):
 
 
 def test_incremental_minhash_flags_history_near_dups(spark):
-    """A new doc that is an exact or near copy of a historical doc is
-    flagged against the store (no historical text read); unrelated new
-    docs are not."""
-    from outreach_etl_tool_spark.dedup import incremental
-
-    history = spark.createDataFrame(
-        [(0, BASE), (2, FAR)], "doc_id long, text string"
-    )
-    new_batch = spark.createDataFrame(
-        [(11, BASE),    # exact copy → est_jaccard 1.0
+    """A new (odd-id) doc that is an exact or near copy of a historical
+    (even-id) doc is flagged from signatures alone (no historical text
+    read), with an estimate near the true Jaccard; unrelated new docs
+    are not flagged."""
+    docs = spark.createDataFrame(
+        [(0, BASE), (2, FAR),   # history
+         (11, BASE),    # exact copy → est_jaccard 1.0
          (13, NEAR),    # one-token edit → high estimate
          (15, "completely different topic entirely new words about gardens "
               "roses tulips daffodils growing in spring sunshine today")],
         "doc_id long, text string",
     )
-    store = incremental.minhash_store(history)
-    got = {r["new_id"]: r for r in incremental.incremental_minhash(
-        new_batch, store, jaccard_threshold=0.5).collect()}
-    assert got[11]["dup_of"] == 0 and got[11]["est_jaccard"] == 1.0
-    assert got[13]["dup_of"] == 0 and got[13]["est_jaccard"] >= 0.5
+    got = {r["id_new"]: r
+           for r in parity.incremental_minhash_parity(docs).collect()}
+    assert got[11]["id_hist"] == 0 and got[11]["est_jaccard"] == 1.0
+    assert got[13]["id_hist"] == 0 and got[13]["est_jaccard"] >= 0.5
     assert 15 not in got
-
-
-def test_incremental_minhash_estimator_tracks_exact_jaccard(spark):
-    """Signature-agreement estimate stays near the true Jaccard for a
-    known-overlap pair (128 hashes → σ ≈ 0.04 at J=0.5)."""
-    from outreach_etl_tool_spark.dedup import incremental, minhash
-
-    history = spark.createDataFrame([(0, BASE)], "doc_id long, text string")
-    batch = spark.createDataFrame([(1, NEAR)], "doc_id long, text string")
-    # exact Jaccard of the pair, from the batch-mode verified operator
-    both = history.union(batch)
-    exact_j = minhash.candidate_pairs(
-        both, "doc_id", "text", jaccard_threshold=0.0
-    ).collect()[0]["jaccard"]
-    store = incremental.minhash_store(history, num_hashes=128)
-    est = incremental.incremental_minhash(
-        batch, store, num_hashes=128, bands=32, jaccard_threshold=0.0
-    ).collect()[0]["est_jaccard"]
-    assert abs(est - exact_j) < 0.15
+    # 32 minhashes → σ ≈ 0.08 at J≈0.74; the constants are pinned, so
+    # the estimate is deterministic
+    sa, sb = _parity_shingles(BASE), _parity_shingles(NEAR)
+    exact_j = len(sa & sb) / len(sa | sb)
+    assert abs(got[13]["est_jaccard"] - exact_j) < 0.15
 
 
 # ------------------------------------------------------------ SimHash
 def test_simhash_near_dups(spark):
-    # Longer docs so a one-token edit flips ≤3 bits — the 4×16-bit
+    # Longer docs so a one-token edit flips ≤3 bits — the 4-band
     # banding's recall guarantee (pigeonhole) only covers Hamming ≤ 3.
     base = (
         "the quick brown fox jumps over the lazy dog while the sun sets "
@@ -221,19 +177,10 @@ def test_simhash_near_dups(spark):
     docs = spark.createDataFrame(
         [(1, base), (2, near), (3, FAR), (4, base)], "doc_id long, text string"
     )
-    got = pairs(simhash.candidate_pairs(docs, "doc_id", "text", max_hamming=3))
+    got = pairs(parity.simhash_pairs_parity(docs, "doc_id", "text"))
     assert (1, 4) in got
     assert (1, 2) in got
     assert all(3 not in p for p in got)
-
-
-def test_simhash_identical_text_zero_hamming(spark, docs):
-    fp = {
-        r["doc_id"]: r["simhash"]
-        for r in simhash.with_simhash(docs).select("doc_id", "simhash").collect()
-    }
-    assert fp[1] == fp[4]
-    assert fp[1] != fp[3]
 
 
 # ------------------------------------------------------- n-gram Jaccard
@@ -270,8 +217,9 @@ def test_embedding_near_dup_pairs(spark):
     rows = [(1, [float(x) for x in base]), (2, [float(x) for x in near]),
             (3, [float(x) for x in far])]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = emb_dedup.near_dup_pairs(df, cosine_threshold=0.95)
-    got = {(r["id_a"], r["id_b"]): r["cos_sim"] for r in out.collect()}
+    out = parity.emb_pairs_parity(df, dim=64, threshold_num=19,
+                                  threshold_den=20)
+    got = {(r["id_a"], r["id_b"]): r["cosine"] for r in out.collect()}
     assert (1, 2) in got and got[(1, 2)] > 0.99
     assert all(3 not in p for p in got)
     # verification is exact: reported cosine matches numpy
@@ -306,10 +254,7 @@ def test_emb_near_dup_registry_params_recall(spark):
         rows.append((vid, [float(x) for x in rng.standard_normal(64)]))
         vid += 1
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = emb_dedup.near_dup_pairs(
-        df, "vec_id", "embedding", dim=64, n_planes=32, bands=8,
-        cosine_threshold=0.40,
-    )
+    out = parity.emb_pairs_parity(df, "vec_id", "embedding", dim=64)
     res = out.collect()
     got = {(r["id_a"], r["id_b"]) for r in res}
     found = got & truth
@@ -344,8 +289,6 @@ def test_decontaminate_semantic_planted_paraphrases(spark):
     every flagged pair genuinely clears the 0.40 gate under exact
     float32 numpy arithmetic, and the split orientation is respected
     (flagged ids are train-side, closest ids eval-side)."""
-    from outreach_etl_tool_spark.dedup import parity
-
     rng = np.random.RandomState(11)
     rows, truth = [], {}
     tid = 1001  # 1001 % 7 != 0; bumped past multiples as we go
@@ -636,19 +579,20 @@ def test_parity_minhash_containment_and_recall(spark):
     pass the exact-Jaccard >= 0.4 gate (containment — no LSH false
     positive survives the verify), identical docs MUST be reported
     (identical shingle sets -> identical signatures -> shared band,
-    recall 1 at j=1.0), and the planted high-Jaccard pair must be
-    found with the pinned constants (recall floor)."""
+    recall 1 at j=1.0), the planted high-Jaccard pair must be found
+    with the pinned constants (recall floor), and token-less docs never
+    pair."""
     from outreach_etl_tool_spark.dedup.parity import minhash_pairs_parity
 
+    texts = {1: BASE, 2: NEAR, 3: FAR, 4: BASE,
+             5: "!!! 123 ...", 6: "!!! 123 ...", 7: ""}
     docs = spark.createDataFrame(
-        [(1, BASE), (2, NEAR), (3, FAR), (4, BASE)],
-        "doc_id long, text string",
+        list(texts.items()), "doc_id long, text string"
     )
     got = {
         (r["id_a"], r["id_b"]): r["jaccard"]
         for r in minhash_pairs_parity(docs, "doc_id", "text").collect()
     }
-    texts = {1: BASE, 2: NEAR, 3: FAR, 4: BASE}
     sh = {d: _parity_shingles(t) for d, t in texts.items()}
     exact = {}
     for a in texts:
@@ -662,6 +606,8 @@ def test_parity_minhash_containment_and_recall(spark):
         assert pair in exact and abs(j - exact[pair]) < 1e-12, (pair, j)
     # guaranteed recall at j=1.0: the identical pair is in
     assert (1, 4) in got and got[(1, 4)] == 1.0
+    # identical but token-less docs have no shingles, so never pair
+    assert all(p[0] < 5 and p[1] < 5 for p in got)
     # pinned-constant recall floor: the planted near-pair is found
     assert (1, 2) in got
 

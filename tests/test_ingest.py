@@ -295,6 +295,30 @@ def test_sync_persistent_failure_raises(spark):
         )
 
 
+class _CallCapHit(BaseException):
+    """Not an Exception, so the fetch retry loop cannot swallow it."""
+
+
+def test_fetch_window_repeated_cursor_raises():
+    """An API that answers every page with the same ``next`` cursor
+    makes the sync fail loudly, naming the endpoint and the cursor,
+    instead of paging forever. The fake fetcher stops at a hard call
+    cap so a missing guard fails the test rather than hanging it."""
+    calls = []
+
+    def fetcher(endpoint, params):
+        calls.append(params.get("page[next]"))
+        if len(calls) > 20:
+            raise _CallCapHit(f"{len(calls)} fetches of one window")
+        return rest.Page(data=[], next_token="cursor-7")
+
+    with pytest.raises(rest.FetchError, match="prospects.*cursor-7"):
+        rest.fetch_window(
+            fetcher, "prospects", dt.date(2024, 3, 1), dt.date(2024, 3, 2)
+        )
+    assert calls == [None, "cursor-7"]
+
+
 def test_day_windows_half_open_no_overlap():
     """Internal windows are half-open and tile exactly."""
     ws = rest.day_windows(dt.date(2024, 3, 1), dt.date(2024, 3, 4))

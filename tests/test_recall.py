@@ -10,7 +10,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from outreach_etl_tool_spark.dedup import minhash, ngram
+from outreach_etl_tool_spark.dedup import ngram, parity
 from outreach_etl_tool_spark.similarity import ann
 
 WORDS = [f"w{i:03d}" for i in range(400)]
@@ -40,9 +40,9 @@ def test_minhash_recall_against_exact_jaccard(spark):
     assert len(exact) >= 20  # the construction produced real near-dups
     found = {
         (r["id_a"], r["id_b"])
-        for r in minhash.candidate_pairs(docs, "doc_id", "text", k=3,
-                                         num_hashes=32, bands=8,
-                                         jaccard_threshold=0.5).collect()
+        for r in parity.minhash_pairs_parity(docs, "doc_id", "text",
+                                             threshold_num=1,
+                                             threshold_den=2).collect()
     }
     # verification guarantees zero false positives…
     assert found <= exact
