@@ -312,12 +312,6 @@ def load_events_between(
     return _events_ns_to_ntz(raw)
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
-) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in names}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view for the spark.sql surface."""
     for name in TABLES:

@@ -67,6 +67,20 @@ def _mh_constants() -> tuple[list[int], list[int]]:
 
 _MH_A, _MH_B = _mh_constants()
 
+# Wide expression lists as SQL text, shared by the Spark builds (each
+# expression parsed JVM-side in one py4j call, not one call per Column
+# node — the functions/vectors.py discipline) and the DuckDB oracles.
+_MH_MIN_SQL = [
+    f"MIN(({_MH_A[i]} * h + {_MH_B[i]}) & {_MH_MASK}) AS s{i}"
+    for i in range(_MH_NUM)
+]
+_MH_KEY_SQL = [
+    "CONCAT_WS(',', "
+    + ", ".join(f"s{b * _MH_ROWS + r}" for r in range(_MH_ROWS))
+    + ")"
+    for b in range(_MH_BANDS)
+]
+
 # 60-bit fingerprint (15 md5 hex chars): close to a 64-bit simhash's
 # tightness — Hamming<=3 of 60 is a near-dup gate, of 32 it
 # would be a loose similarity gate (measured 725 vs ~17 pairs at
@@ -74,6 +88,28 @@ _MH_A, _MH_B = _mh_constants()
 _SH_BITS = 60
 _SH_BANDS, _SH_BAND_BITS = 4, 15
 _SH_MAXHAM = 3  # < _SH_BANDS -> pigeonhole-exhaustive banding
+
+
+def _sh_sql(shift: str) -> tuple[list[str], str, list[str]]:
+    """SimHash SQL text: the 60 vote SUMs, the fingerprint sum and the
+    4 band keys (without the VARCHAR/STRING cast). ``shift`` is the
+    engine's right-shift call template (bit j of a non-negative
+    60-bit hash is the same under either engine's shift)."""
+    votes = [
+        f"SUM(CASE WHEN {shift.format('h', j)} & 1 = 1 THEN 1 ELSE -1 END)"
+        f" AS v{j}"
+        for j in range(_SH_BITS)
+    ]
+    fp = " + ".join(
+        f"(CASE WHEN v{j} > 0 THEN {1 << j} ELSE 0 END)"
+        for j in range(_SH_BITS)
+    )
+    keys = [
+        f"{shift.format('fp', b * _SH_BAND_BITS)}"
+        f" & {(1 << _SH_BAND_BITS) - 1}"
+        for b in range(_SH_BANDS)
+    ]
+    return votes, fp, keys
 
 
 def _hex_long(col: Column, n: int) -> Column:
@@ -97,38 +133,15 @@ def _mh_signature(sh: DataFrame) -> DataFrame:
     hs = sh.select("id", F.explode("sh").alias("s")).select(
         "id", _hex_long(F.col("s"), 7).alias("h")
     )
-    return hs.groupBy("id").agg(
-        *[
-            F.min(
-                (F.lit(_MH_A[i]) * F.col("h") + F.lit(_MH_B[i]))
-                .bitwiseAND(F.lit(_MH_MASK))
-            ).alias(f"s{i}")
-            for i in range(_MH_NUM)
-        ]
-    )
+    return hs.groupBy("id").agg(*[F.expr(m) for m in _MH_MIN_SQL])
 
 
 def _mh_banded(sig: DataFrame) -> DataFrame:
-    return sig.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.concat_ws(
-                            ",",
-                            *[
-                                F.col(f"s{b * _MH_ROWS + r}")
-                                for r in range(_MH_ROWS)
-                            ],
-                        ).alias("key"),
-                    )
-                    for b in range(_MH_BANDS)
-                ]
-            )
-        ).alias("bk"),
-    ).select("id", "bk.band", "bk.key")
+    rows = ", ".join(
+        f"named_struct('band', {b}, 'key', {key})"
+        for b, key in enumerate(_MH_KEY_SQL)
+    )
+    return sig.selectExpr("id", f"inline(array({rows}))")
 
 
 def _mh_candidates(sh: DataFrame) -> DataFrame:
@@ -220,19 +233,10 @@ def _banded_pairs(banded: DataFrame) -> DataFrame:
 def minhash_pairs_parity_sql(
     threshold_num: int = 2, threshold_den: int = 5
 ) -> str:
-    mins = ",\n           ".join(
-        f"MIN(({_MH_A[i]} * h + {_MH_B[i]}) & {_MH_MASK}) AS s{i}"
-        for i in range(_MH_NUM)
-    )
+    mins = ",\n           ".join(_MH_MIN_SQL)
     band_rows = "\n    UNION ALL\n".join(
-        "    SELECT id, {b} AS band, CONCAT_WS(',', {cols}) AS key FROM sig"
-        .format(
-            b=b,
-            cols=", ".join(
-                f"s{b * _MH_ROWS + r}" for r in range(_MH_ROWS)
-            ),
-        )
-        for b in range(_MH_BANDS)
+        f"    SELECT id, {b} AS band, {key} AS key FROM sig"
+        for b, key in enumerate(_MH_KEY_SQL)
     )
     return f"""
 WITH sh AS (
@@ -303,39 +307,14 @@ def simhash_pairs_parity(
     th = tok.select(
         "id", _hex_long(F.col("t"), _SH_BITS // 4).alias("h")
     )
-    votes = th.groupBy("id").agg(
-        *[
-            F.sum(
-                F.when(
-                    F.shiftrightunsigned("h", j).bitwiseAND(F.lit(1)) == 1,
-                    1,
-                ).otherwise(-1)
-            ).alias(f"v{j}")
-            for j in range(_SH_BITS)
-        ]
+    votes_sql, fp_sql, keys_sql = _sh_sql("shiftrightunsigned({}, {})")
+    votes = th.groupBy("id").agg(*[F.expr(v) for v in votes_sql])
+    fp = votes.selectExpr("id", f"CAST({fp_sql} AS BIGINT) AS fp")
+    rows = ", ".join(
+        f"named_struct('band', {b}, 'key', CAST({key} AS STRING))"
+        for b, key in enumerate(keys_sql)
     )
-    fp_expr = None
-    for j in range(_SH_BITS):
-        bit = F.when(F.col(f"v{j}") > 0, F.lit(1 << j)).otherwise(F.lit(0))
-        fp_expr = bit if fp_expr is None else fp_expr + bit
-    fp = votes.select("id", fp_expr.cast("long").alias("fp"))
-    banded = fp.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftrightunsigned("fp", b * _SH_BAND_BITS)
-                        .bitwiseAND(F.lit((1 << _SH_BAND_BITS) - 1))
-                        .cast("string")
-                        .alias("key"),
-                    )
-                    for b in range(_SH_BANDS)
-                ]
-            )
-        ).alias("bk"),
-    ).select("id", "bk.band", "bk.key")
+    banded = fp.selectExpr("id", f"inline(array({rows}))")
     cands = _banded_pairs(banded)
     va = cands.join(
         fp.select(F.col("id").alias("id_a"), F.col("fp").alias("fa")), "id_a"
@@ -432,17 +411,10 @@ def minhash_pair_ctes(
     batch-thirds membership); ``cand_join`` injects extra relations
     the predicate needs (round-13 refactor — one generator, two
     oracles)."""
-    mins = ",\n           ".join(
-        f"MIN(({_MH_A[i]} * h + {_MH_B[i]}) & {_MH_MASK}) AS s{i}"
-        for i in range(_MH_NUM)
-    )
+    mins = ",\n           ".join(_MH_MIN_SQL)
     band_rows = "\n    UNION ALL\n".join(
-        "    SELECT id, {b} AS band, CONCAT_WS(',', {cols}) AS key FROM sig"
-        .format(
-            b=b,
-            cols=", ".join(f"s{b * _MH_ROWS + r}" for r in range(_MH_ROWS)),
-        )
-        for b in range(_MH_BANDS)
+        f"    SELECT id, {b} AS band, {key} AS key FROM sig"
+        for b, key in enumerate(_MH_KEY_SQL)
     )
     agree = " + ".join(
         f"(CASE WHEN a.s{i} = b.s{i} THEN 1 ELSE 0 END)"
@@ -1038,19 +1010,11 @@ ORDER BY id_a, id_b
 
 
 def simhash_pairs_parity_sql() -> str:
-    votes = ",\n           ".join(
-        f"SUM(CASE WHEN (h >> {j}) & 1 = 1 THEN 1 ELSE -1 END) AS v{j}"
-        for j in range(_SH_BITS)
-    )
-    fp = " + ".join(
-        f"(CASE WHEN v{j} > 0 THEN {1 << j} ELSE 0 END)"
-        for j in range(_SH_BITS)
-    )
+    votes_sql, fp, keys_sql = _sh_sql("({} >> {})")
+    votes = ",\n           ".join(votes_sql)
     band_rows = "\n    UNION ALL\n".join(
-        f"    SELECT id, {b} AS band, "
-        f"CAST((fp >> {b * _SH_BAND_BITS}) & {(1 << _SH_BAND_BITS) - 1} "
-        f"AS VARCHAR) AS key FROM fp"
-        for b in range(_SH_BANDS)
+        f"    SELECT id, {b} AS band, CAST({key} AS VARCHAR) AS key FROM fp"
+        for b, key in enumerate(keys_sql)
     )
     return f"""
 WITH tok AS (

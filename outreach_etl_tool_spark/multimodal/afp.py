@@ -29,8 +29,10 @@ banded join's Hamming ≤ 3 recall guarantee (pigeonhole over 4 bands)
 separates true near-dups exactly.
 
 Scale: one Arrow decode pass per clip (payload bytes never leave the
-executor), then only (id, fingerprint) moves — identical shape to the
-image phash path.
+executor), then only (id, fingerprint) moves: the pair rides the one
+(band, chunk) bucket shuffle, where candidates expand and verify, so
+each clip is decoded once and building the op starts no Spark job —
+identical shape to the image phash path.
 """
 
 from __future__ import annotations
@@ -132,7 +134,7 @@ def audio_fingerprints(ids: DataFrame) -> DataFrame:
 
 def audio_near_dup(ids: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-duplicate clip pairs by audio fingerprint — the shared
-    banded-Hamming candidate machinery + exact popcount verify."""
+    one-pass banded-Hamming candidate + exact popcount verify."""
     return fingerprint_pairs(
         audio_fingerprints(ids),
         id_col="asset_id",

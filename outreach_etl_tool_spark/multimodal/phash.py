@@ -4,8 +4,10 @@ Average-hash (aHash): resize to 8×8 (the existing block-mean pipeline —
 stub codec, real plumbing), set bit i when pixel_i exceeds the image
 mean, pack to one 64-bit fingerprint. Visually-near-identical images
 differ in a few bits, so candidate generation is the shared 4×16-band
-bucket join (`dedup.fingerprint.fingerprint_pairs`) — image bytes ride
-exactly one narrow decode pass, then only (id, hash) moves.
+bucket pass (`dedup.fingerprint.fingerprint_pairs`) — image bytes ride
+exactly one narrow decode pass, then only (id, hash) moves, through
+the one bucket shuffle that also expands and verifies the pairs, so
+each image is decoded once.
 
 A real deployment swaps the stub decode inside `resize_images` for
 PIL/libvips; everything downstream of the 8×8 grid — the hash kernel,

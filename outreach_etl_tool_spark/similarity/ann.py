@@ -16,16 +16,12 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, IntegerType
 
 from ..functions.vectors import cosine
 from ..operators.util import ensure_parallelism
-
-
-def _lit_vec(vec: list[float]) -> Column:
-    return F.lit([float(v) for v in vec])
 
 
 def topk_bruteforce(

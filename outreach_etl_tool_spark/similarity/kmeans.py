@@ -18,6 +18,12 @@ uniform sample converges to near-identical cells at a fraction of the
 cost, and the full corpus is only touched by the final `assign_cells`
 that materializes the layout. Empty cells keep their previous centroid
 (the standard fix) so k never silently shrinks.
+
+Small fit sets skip the loop: one collect, bounded at
+``driver_fit_max + 1`` rows, brings them to the driver, where Lloyd
+runs bit-identically — one Spark job per build, no persist and no
+count. Only a fit set that overflows the bound is persisted and runs
+the distributed loop.
 """
 
 from __future__ import annotations
@@ -71,7 +77,7 @@ _DRIVER_FIT_MAX = 65536
 
 
 def _driver_lloyd(
-    fit: DataFrame, k: int, iters: int, id_col: str, vec_col: str
+    pdf: pd.DataFrame, k: int, iters: int, id_col: str, vec_col: str
 ) -> list[list[float]]:
     """Lloyd on the driver over the collected fit set — BIT-IDENTICAL
     to the distributed loop (pinned by tests/test_recall.py): the
@@ -80,10 +86,10 @@ def _driver_lloyd(
     float64 rows in the same id-ascending order as ``_cell_means``
     (``mat[mask].mean(axis=0)`` over an id-sorted matrix ≡ the
     per-cell sort + mean in the executors). What the fast path buys is
-    job COUNT: one Arrow collect instead of iters × (Arrow assign pass
-    + groupBy shuffle + k-row collect) — measured ~8 scheduler
-    round-trips per IVF query at sf0.1."""
-    pdf = fit.toPandas().sort_values(id_col)
+    job COUNT: the one bounded collect that fetched ``pdf`` instead of
+    iters × (Arrow assign pass + groupBy shuffle + k-row collect) —
+    measured ~8 scheduler round-trips per IVF query at sf0.1."""
+    pdf = pdf.sort_values(id_col)
     mat = np.stack(
         [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
     )
@@ -120,16 +126,20 @@ def kmeans_centroids(
     tolerance-driven: each iteration is a full pass, and for a coarse
     quantizer a handful of rounds captures nearly all of the recall
     gain. Fit sets up to ``driver_fit_max`` vectors train on the
-    driver (``_driver_lloyd`` — bit-identical, one collect instead of
-    3 jobs per iteration); 0 disables the fast path.
+    driver (``_driver_lloyd`` — bit-identical, fed by one collect
+    bounded at ``driver_fit_max + 1`` rows instead of 3 jobs per
+    iteration; a fit set that overflows the bound falls back to the
+    distributed loop); 0 disables the fast path.
     """
     fit = df.select(id_col, vec_col).filter(F.col(vec_col).isNotNull())
     if fit_fraction is not None:
         fit = fit.sample(fraction=fit_fraction, seed=seed)
+    if driver_fit_max > 0:
+        pdf = fit.limit(driver_fit_max + 1).toPandas()
+        if len(pdf) <= driver_fit_max:
+            return _driver_lloyd(pdf, k, iters, id_col, vec_col)
     fit = fit.persist()
     try:
-        if driver_fit_max > 0 and fit.count() <= driver_fit_max:
-            return _driver_lloyd(fit, k, iters, id_col, vec_col)
         cents = np.asarray(sample_centroids(fit, k, id_col, vec_col), dtype=np.float64)
         for _ in range(iters):
             with_cells = assign_cells(fit, cents.tolist(), vec_col)

@@ -71,6 +71,7 @@ def _load_names(schema_file: str) -> list[str]:
 # ingest and format("restapi") ingest different column names for the
 # same payload)
 from ..ingest.flatten import flatten_record as _flatten  # noqa: E402
+from ..ingest.rest import FetchError  # noqa: E402
 
 
 class _Reader(DataSourceReader):
@@ -109,7 +110,12 @@ class _Reader(DataSourceReader):
             "filter[updatedAt]": f"{window.lo}..{hi_incl}",
         }
         url: str | None = f"{base}/{endpoint}?{urllib.parse.urlencode(params)}"
+        followed: set[str] = set()
         while url is not None:
+            # a link the API already returned would page forever
+            if url in followed:
+                raise FetchError(f"{endpoint}: repeated next link {url!r}")
+            followed.add(url)
             body = self._http_get(url, token)
             yield body.get("data", [])
             url = (body.get("links") or {}).get("next")
@@ -128,7 +134,7 @@ class _Reader(DataSourceReader):
                     return json.loads(resp.read())
             except Exception as exc:  # noqa: BLE001
                 last = exc
-        raise RuntimeError(f"GET {url}: retries exhausted") from last
+        raise FetchError(f"GET {url}: {max_retries} attempts failed") from last
 
     def _pages_dir(self, window: DayWindow) -> Iterator[list[dict]]:
         root = Path(self.options["dir_url"]) / self.options["endpoint"] / window.lo

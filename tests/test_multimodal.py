@@ -158,6 +158,59 @@ def test_phash_near_dup_pairs(spark):
     assert any(3 in p for p in pairs), pairs
 
 
+def test_fingerprint_pairs_bucket_cap_matches_reference(spark, monkeypatch):
+    """The degenerate-bucket cap, pinned against a pure-Python
+    reference: per (band, chunk) bucket keep the first ``_MAX_BUCKET``
+    ids ascending, pair them, keep Hamming ≤ 3, drop duplicates.
+    Eight ids share band 0's chunk under a cap of 4: ids 14/15 sit at
+    Hamming 3 but share only that band, so the cap drops their pair;
+    16/17 also pair through band 1, so they survive the cap."""
+    import numpy as np
+
+    from outreach_etl_tool_spark.dedup import fingerprint
+
+    monkeypatch.setattr(fingerprint, "_MAX_BUCKET", 4)
+    shared = 0x1234
+    fps = {
+        10: shared,
+        11: shared | (1 << 16),
+        12: shared | (0b11 << 20) | (1 << 40),
+        13: shared | (0x7FFF << 48),
+        14: shared | (1 << 17) | (1 << 33) | (1 << 49),
+        15: shared | (1 << 18) | (1 << 34) | (1 << 50),
+        16: shared | (0x5555 << 16) | (0x0F0F << 32),
+        17: shared | (0x5555 << 16) | (0x0F0E << 32) | (1 << 62),
+    }
+    rng = np.random.RandomState(11)
+    for i in range(20, 60):
+        fps[i] = int(rng.randint(-(2**63), 2**63 - 1, dtype=np.int64))
+    fps[60] = fps[20] ^ 0b101  # a near copy of a random id
+    fps[61] = -1  # all ones: the sign bit set
+    fps[62] = -2
+
+    mask = (1 << 64) - 1
+    buckets: dict[tuple[int, int], list[int]] = {}
+    for i, h in fps.items():
+        for b in range(4):
+            buckets.setdefault((b, (h & mask) >> (16 * b) & 0xFFFF), []).append(i)
+    want = set()
+    for ids in buckets.values():
+        kept = sorted(ids)[:4]
+        for x, a in enumerate(kept):
+            for b in kept[x + 1:]:
+                ham = bin((fps[a] ^ fps[b]) & mask).count("1")
+                if ham <= 3:
+                    want.add((a, b, ham))
+    assert (14, 15, 3) not in want and (16, 17, 2) in want
+    assert (60 - 40, 60, 2) in want and (61, 62, 1) in want
+
+    df = spark.createDataFrame(sorted(fps.items()), "id long, fp long")
+    rows = fingerprint.fingerprint_pairs(df, max_hamming=3).collect()
+    got = [(r["id_a"], r["id_b"], r["hamming"]) for r in rows]
+    assert len(got) == len(set(got))
+    assert set(got) == want
+
+
 def test_phash_skips_undecodable_assets(spark):
     from outreach_etl_tool_spark.multimodal.phash import ahash_images
 

@@ -550,3 +550,30 @@ def test_shuffle_budget(spark, name):
     assert a.shuffles <= SHUFFLE_BUDGETS[name], (
         f"{name}: {a.shuffles} exchanges > budget {SHUFFLE_BUDGETS[name]}"
     )
+
+
+# Jobs a registry op may start while spec.fn() BUILDS its frame (work
+# counts, not wall time). The multimodal dedup ops carry (id, fp)
+# through one bucket shuffle, so their build is fully lazy; the IVF
+# k-means fit is one bounded collect of the fit set.
+BUILD_JOBS = {
+    "multimodal_audio_fp_dedup": 0,
+    "multimodal_phash_dedup": 0,
+    "sim_ann_ivf": 1,
+}
+
+
+@pytest.mark.parametrize("name", sorted(BUILD_JOBS))
+def test_build_job_count(spark, name):
+    sc = spark.sparkContext
+    group = f"build-jobs:{name}"
+    spark.catalog.clearCache()
+    sc.setJobGroup(group, name)
+    try:
+        REGISTRY[name].fn(spark, SF)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status tracker is fed by the asynchronous listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs == BUILD_JOBS[name], f"{name}: {jobs} jobs while building"

@@ -13,31 +13,53 @@ from pyspark.sql import functions as F
 from outreach_etl_tool_spark.dedup import ngram, parity
 from outreach_etl_tool_spark.similarity import ann
 
-WORDS = [f"w{i:03d}" for i in range(400)]
+# Alphabetic words ("aaa", "aab", …): the tokenizer keeps letter runs
+# only, so digit-bearing words like "w017" would all become "w"
+WORDS = [
+    "".join(chr(ord("a") + i // 26**p % 26) for p in (2, 1, 0))
+    for i in range(400)
+]
 
 
 def corpus(spark, n_base: int = 40, seed: int = 7):
-    """n_base random docs plus one high-Jaccard (~0.8) edit of each."""
+    """n_base random docs plus one near-duplicate edit of each (4 of 60
+    tokens replaced: shingle Jaccard ~0.6-0.8)."""
     rng = random.Random(seed)
     rows = []
     for i in range(n_base):
         toks = [rng.choice(WORDS) for _ in range(60)]
         rows.append((2 * i, " ".join(toks)))
         edited = list(toks)
-        for _ in range(4):  # ~4/60 token edits → shingle Jaccard ~0.75-0.85
+        for _ in range(4):
             edited[rng.randrange(60)] = rng.choice(WORDS)
         rows.append((2 * i + 1, " ".join(edited)))
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
 def test_minhash_recall_against_exact_jaccard(spark):
+    """Registry MinHash recall against exact shingle Jaccard, bounded
+    by the banding curve.
+
+    32 minhashes in 8 bands of r = 4: each minhash of a pair with
+    Jaccard J agrees with probability J, so the pair shares at least
+    one band key with probability p(J) = 1 - (1 - J^4)^8. Over the n
+    true pairs (exact J >= 1/2) the number found is a sum of
+    independent Bernoulli(p(J_i)) trials: mean mu = sum p(J_i),
+    variance var = sum p(J_i)(1 - p(J_i)). The stated margin is two
+    standard deviations, a one-sided false-alarm rate of about 2.3%
+    under that model, so the bound is recall >= (mu - 2 sqrt(var)) / n.
+    The verify is exact, so no false positive may appear."""
+    import math
+
     docs = corpus(spark)
-    exact = {
-        (r["id_a"], r["id_b"])
+    jac = {
+        (r["id_a"], r["id_b"]): r["jaccard"]
         for r in ngram.jaccard_pairs(docs, "doc_id", "text", k=3,
                                      threshold=0.5).collect()
     }
+    exact = set(jac)
     assert len(exact) >= 20  # the construction produced real near-dups
+    assert len({j for j in jac.values()}) > 1  # not one degenerate J
     found = {
         (r["id_a"], r["id_b"])
         for r in parity.minhash_pairs_parity(docs, "doc_id", "text",
@@ -46,10 +68,15 @@ def test_minhash_recall_against_exact_jaccard(spark):
     }
     # verification guarantees zero false positives…
     assert found <= exact
-    # …and banding theory (j≈0.6+ → p ≥ 1-(1-0.6^4)^8 ≈ 0.73; our pairs
-    # sit near 0.8 → ~0.97) puts measured recall high
-    recall = len(found & exact) / len(exact)
-    assert recall >= 0.8, f"recall {recall:.2f}, {len(exact)} true pairs"
+    # …and the banding curve bounds recall from below
+    p = [1.0 - (1.0 - j**4) ** 8 for j in jac.values()]
+    mu, var = sum(p), sum(q * (1.0 - q) for q in p)
+    bound = (mu - 2.0 * math.sqrt(var)) / len(exact)
+    recall = len(found) / len(exact)
+    assert recall >= bound, (
+        f"recall {recall:.2f} < banding bound {bound:.2f} "
+        f"(expected {mu / len(exact):.2f}), {len(exact)} true pairs"
+    )
 
 
 def test_ivf_recall_vs_brute_force(spark):

@@ -262,3 +262,65 @@ def test_stream_tail_midbatch_failure_never_advances_offset(tmp_path):
     # caught up: offset stays put, no rows
     rows2, same = reader.read(nxt)
     assert list(rows2) == [] and same == nxt
+
+
+class _CallCap(BaseException):
+    """Stops a reader that would page forever. A BaseException, so no
+    ``except Exception`` in the reader can swallow it and the test
+    fails instead of hanging."""
+
+
+def test_restapi_repeated_next_link_raises_fetch_error(monkeypatch):
+    """An API that keeps returning the same ``links.next`` must make
+    the HTTP transport fail loudly with ``FetchError`` naming the
+    endpoint and the repeated link, not page forever (the ingest
+    path's ``fetch_window`` contract, held by the DataSource too)."""
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from outreach_etl_tool_spark.ingest.rest import FetchError
+    from outreach_etl_tool_spark.sources.restapi import DayWindow, _Reader
+
+    loop = "http://api.test/prospects?page%5Bnext%5D=c1"
+    calls = {"n": 0}
+
+    def same_next(url, token, max_retries=3):
+        calls["n"] += 1
+        if calls["n"] > 20:
+            raise _CallCap(f"{calls['n']} GETs")
+        return {
+            "data": [{"id": calls["n"], "attributes": {"name": "x"}}],
+            "links": {"next": loop},
+        }
+
+    monkeypatch.setattr(_Reader, "_http_get", staticmethod(same_next))
+    schema = StructType([StructField(n, StringType(), True) for n in SCHEMA])
+    reader = _Reader(
+        schema,
+        {
+            "endpoint": "prospects",
+            "base_url": "http://api.test",
+            "start": "2024-03-01",
+            "end": "2024-03-02",
+        },
+    )
+    with pytest.raises(FetchError, match="prospects.*repeated") as err:
+        list(reader.read(DayWindow("2024-03-01", "2024-03-02")))
+    assert loop in str(err.value)
+    assert calls["n"] == 2  # the first page, then the link once
+
+
+def test_restapi_http_get_exhausted_retries_raise_fetch_error(monkeypatch):
+    """Exhausted retries surface as ``FetchError`` (the ingest path's
+    error type), with the transport's last failure as the cause."""
+    import urllib.request
+
+    from outreach_etl_tool_spark.ingest.rest import FetchError
+    from outreach_etl_tool_spark.sources.restapi import _Reader
+
+    def refuse(req, timeout=None):
+        raise ConnectionRefusedError("refused")
+
+    monkeypatch.setattr(urllib.request, "urlopen", refuse)
+    with pytest.raises(FetchError, match="3 attempts failed") as err:
+        _Reader._http_get("http://api.test/prospects", "")
+    assert isinstance(err.value.__cause__, ConnectionRefusedError)
