@@ -12,8 +12,10 @@ Usage::
 
     python -m outreach_etl_tool_spark --config creds.json --output /data
 
-The HTTP fetcher is injected; the default OAuth+requests implementation
-is constructed lazily so offline/test runs can pass any callable.
+The fetcher is injected, so offline/test runs can pass any callable.
+The default is `ingest.rest.HttpFetcher` — the engine's one HTTP
+transport, which the `restapi` DataSource also uses — with an OAuth
+refresh-token callable as its Bearer token.
 """
 
 from __future__ import annotations
@@ -28,7 +30,9 @@ from pathlib import Path
 from pyspark.sql import SparkSession
 
 from .ingest import load_ref_schema
-from .ingest.rest import Fetcher, replication_window, strip_prefix, sync_endpoint
+from .ingest.rest import (
+    Fetcher, HttpFetcher, replication_window, strip_prefix, sync_endpoint,
+)
 from .sinks import LogNotifier, Notifier, write_partitioned
 
 logger = logging.getLogger("outreach_etl_tool_spark")
@@ -47,7 +51,8 @@ TOKEN_URL = "https://api.outreach.io/oauth/token"
 
 def make_http_fetcher(config: dict) -> Fetcher:
     """OAuth-refreshing JSON-API fetcher (outreach_etl.py:54-109 parity,
-    without the stale-global token bug — expiry lives in the closure)."""
+    without the stale-global token bug — expiry lives in the closure).
+    The token POST uses requests; the page GETs are ``HttpFetcher``'s."""
     import time as _time
 
     import requests  # deferred: offline runs never import it
@@ -74,25 +79,7 @@ def make_http_fetcher(config: dict) -> Fetcher:
             state["expires_at"] = _time.time() + payload.get("expires_in", 7200) - 100
         return state["token"]
 
-    def fetch(endpoint: str, params: dict):
-        from .ingest.rest import Page
-
-        url = params.pop("__url", f"{API_BASE}/{endpoint}")
-        resp = requests.get(
-            url,
-            headers={"Authorization": f"Bearer {token()}"},
-            params={k: v for k, v in params.items() if not k.startswith("__")},
-            timeout=60,
-        )
-        resp.raise_for_status()
-        body = resp.json()
-        return Page(
-            data=body.get("data", []),
-            next_token=body.get("links", {}).get("next"),
-            total=body.get("meta", {}).get("count"),
-        )
-
-    return fetch
+    return HttpFetcher(API_BASE, token)
 
 
 def run_replication(

@@ -16,14 +16,24 @@ Scale design: the driver only orchestrates; record flattening and
 frame building run on executors. The distributed path partitions the
 date range and fetches day-windows in parallel with ``mapInPandas`` —
 one task per day, the Spark analog of the reference's adaptive
-per-day re-plan (outreach_etl.py:127,157). The fetcher is an injected
-callable (endpoint, params) → Page, so tests (and any real HTTP
-client) plug in without the engine importing requests.
+per-day re-plan (outreach_etl.py:127,157).
+
+This module is the engine's one REST extract: ``fetch_window`` owns
+the pager and repeated-cursor guard, ``_fetch_retry`` the retry loop,
+``day_windows`` the day partitioning. The transport is a ``Fetcher``
+callable (endpoint, params) → Page. ``HttpFetcher`` is the one HTTP
+transport (stdlib urllib, Bearer token from a callable); the CLI's
+OAuth fetcher and the ``restapi`` DataSource both page through it, and
+tests inject fakes.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import json
+import urllib.error
+import urllib.parse
+import urllib.request
 from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field
 from typing import Any
@@ -51,16 +61,56 @@ Fetcher = Callable[[str, dict[str, Any]], Page]
 
 
 class FetchError(RuntimeError):
-    """Raised when a page cannot be fetched within the retry budget."""
+    """Raised when a page cannot be fetched: a permanent error, or a
+    transient one that outlived the retry budget."""
+
+
+@dataclass(frozen=True)
+class HttpFetcher:
+    """JSON-API ``Fetcher`` over HTTP GET. Page 1 is
+    ``{base_url}/{endpoint}?{params}``; a ``page[next]`` param is the
+    API's ``links.next``, an absolute URL, so it is fetched verbatim.
+    ``token`` is called per request (the caller owns refresh); an empty
+    token sends no Authorization header. A 4xx other than 408/429 is
+    permanent and raises ``FetchError``; anything else propagates for
+    ``_fetch_retry`` to retry."""
+
+    base_url: str
+    token: Callable[[], str]
+
+    def __call__(self, endpoint: str, params: dict[str, Any]) -> Page:
+        url = params.get("page[next]") or (
+            f"{self.base_url.rstrip('/')}/{endpoint}?{urllib.parse.urlencode(params)}"
+        )
+        token = self.token()
+        req = urllib.request.Request(
+            url, headers={"Authorization": f"Bearer {token}"} if token else {}
+        )
+        try:
+            with urllib.request.urlopen(req, timeout=60) as resp:
+                body = json.loads(resp.read())
+        except urllib.error.HTTPError as exc:
+            if 400 <= exc.code < 500 and exc.code not in (408, 429):
+                raise FetchError(f"{endpoint}: GET {url} -> HTTP {exc.code}") from exc
+            raise
+        return Page(
+            data=body.get("data", []),
+            next_token=(body.get("links") or {}).get("next"),
+            total=(body.get("meta") or {}).get("count"),
+        )
 
 
 def _fetch_retry(
     fetcher: Fetcher, endpoint: str, params: dict[str, Any], max_retries: int
 ) -> Page:
+    """Retry transient fetch failures; a ``FetchError`` is permanent
+    and re-raised at once."""
     last: Exception | None = None
     for _ in range(max_retries):
         try:
             return fetcher(endpoint, params)
+        except FetchError:
+            raise
         except Exception as exc:  # noqa: BLE001 — fetcher errors are opaque
             last = exc
     raise FetchError(f"{endpoint}: {max_retries} attempts failed") from last

@@ -15,18 +15,22 @@ Usage::
 Design (SURVEY.md §2.1 S1):
 
 - **partitions()** returns one `DayWindow` per half-open [day, day+1)
-  — Spark schedules them across executors; a year's backfill is 365
-  parallel tasks instead of the reference's sequential loop.
-- **read(partition)** pages through its window with bounded retries
-  and no duplicate appends (the §2.12 bug fixes), flattens each
-  record to the declared column layout, and yields tuples.
+  (`ingest.rest.day_windows`) — Spark schedules them across executors;
+  a year's backfill is 365 parallel tasks instead of the reference's
+  sequential loop.
+- **read(partition)** is `ingest.rest.fetch_window` over its window —
+  the one REST extract the sync driver and the CLI also run: bounded
+  retries, permanent errors failing at once, no duplicate appends, a
+  repeated `links.next` raising `FetchError` (the §2.12 bug fixes) —
+  then aligns each flat record to the declared column layout.
 - **Filter pushdown** is positional by construction: the date window
   IS the querystring filter, evaluated server-side, mirroring
   `filter[updatedAt]` (outreach_etl.py:115-117).
-- Transport: `base_url` (HTTP GET via urllib, Bearer token from the
-  `token` option) or `dir_url` (a directory of
-  `{endpoint}/{day}/page{N}.json` files — the deterministic test/replay
-  transport; also what a capture-then-replay backfill uses).
+- Transport: `base_url` selects `ingest.rest.HttpFetcher` (Bearer token
+  from the `token` option); `dir_url` selects `_DirFetcher`, a
+  directory of `{endpoint}/{day}/page{N}.json` files numbered from 0
+  (the deterministic test/replay transport; also what a
+  capture-then-replay backfill uses).
 - **Streaming form**: `spark.readStream.format("restapi")` tails the
   same source one day-window per micro-batch (offset = next unread
   day, never past yesterday/`end`) — the reference's `previous_day`
@@ -44,6 +48,7 @@ import json
 from collections.abc import Iterator
 from dataclasses import dataclass
 from pathlib import Path
+from typing import Any
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -53,6 +58,9 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StringType, StructField, StructType
 
+from ..ingest.rest import Fetcher, HttpFetcher, Page, day_windows, fetch_window
+from ..ingest.schema_loader import load_ref_schema
+
 
 @dataclass
 class DayWindow(InputPartition):
@@ -60,18 +68,26 @@ class DayWindow(InputPartition):
     hi: str  # ISO date, exclusive
 
 
-def _load_names(schema_file: str) -> list[str]:
-    with open(schema_file) as fh:
-        return list(json.load(fh))
+@dataclass(frozen=True)
+class _DirFetcher:
+    """Replay ``Fetcher``: page N of a day is
+    ``{root}/{endpoint}/{day}/page{N}.json``, and ``page[next]`` is the
+    next page's index while that file exists. Windows are single days
+    (the reader's partitions), so the filter's lower bound names it."""
 
+    root: str
 
-# single source of truth for the flatten naming contract: the
-# golden-tested helper in ingest/flatten.py (a byte-level reimpl here
-# would silently drift from fixes landed there, giving batch-driver
-# ingest and format("restapi") ingest different column names for the
-# same payload)
-from ..ingest.flatten import flatten_record as _flatten  # noqa: E402
-from ..ingest.rest import FetchError  # noqa: E402
+    def __call__(self, endpoint: str, params: dict[str, Any]) -> Page:
+        day = params["filter[updatedAt]"].split("..")[0]
+        n = int(params.get("page[next]", 0))
+        path = Path(self.root) / endpoint / day / f"page{n}.json"
+        if not path.is_file():
+            return Page()
+        nxt = path.with_name(f"page{n + 1}.json")
+        return Page(
+            data=json.loads(path.read_text()).get("data", []),
+            next_token=str(n + 1) if nxt.is_file() else None,
+        )
 
 
 class _Reader(DataSourceReader):
@@ -82,81 +98,26 @@ class _Reader(DataSourceReader):
     def partitions(self) -> list[DayWindow]:
         lo = dt.date.fromisoformat(self.options["start"])
         hi = dt.date.fromisoformat(self.options["end"])
-        days = []
-        d = lo
-        while d < hi:
-            days.append(DayWindow(d.isoformat(), (d + dt.timedelta(days=1)).isoformat()))
-            d += dt.timedelta(days=1)
-        return days
+        return [DayWindow(a.isoformat(), b.isoformat()) for a, b in day_windows(lo, hi)]
 
-    # -- transports ---------------------------------------------------
-    def _pages_http(self, window: DayWindow) -> Iterator[list[dict]]:
-        import urllib.parse
-        import urllib.request
-
-        base = self.options["base_url"].rstrip("/")
-        endpoint = self.options["endpoint"]
-        page_size = int(self.options.get("page_size", "100"))
+    def _fetcher(self) -> Fetcher:
+        if "dir_url" in self.options:
+            return _DirFetcher(self.options["dir_url"])
         token = self.options.get("token", "")
-        # server range semantics are inclusive..inclusive (the reference
-        # sends date..date, outreach_etl.py:166); the half-open window
-        # converts to an inclusive upper bound of hi - 1 day
-        hi_incl = (
-            dt.date.fromisoformat(window.hi) - dt.timedelta(days=1)
-        ).isoformat()
-        params = {
-            "sort": "-updatedAt",
-            "page[limit]": str(page_size),
-            "filter[updatedAt]": f"{window.lo}..{hi_incl}",
-        }
-        url: str | None = f"{base}/{endpoint}?{urllib.parse.urlencode(params)}"
-        followed: set[str] = set()
-        while url is not None:
-            # a link the API already returned would page forever
-            if url in followed:
-                raise FetchError(f"{endpoint}: repeated next link {url!r}")
-            followed.add(url)
-            body = self._http_get(url, token)
-            yield body.get("data", [])
-            url = (body.get("links") or {}).get("next")
+        return HttpFetcher(self.options["base_url"], lambda: token)
 
-    @staticmethod
-    def _http_get(url: str, token: str, max_retries: int = 3) -> dict:
-        import urllib.request
-
-        last: Exception | None = None
-        for _ in range(max_retries):
-            try:
-                req = urllib.request.Request(
-                    url, headers={"Authorization": f"Bearer {token}"} if token else {}
-                )
-                with urllib.request.urlopen(req, timeout=60) as resp:
-                    return json.loads(resp.read())
-            except Exception as exc:  # noqa: BLE001
-                last = exc
-        raise FetchError(f"GET {url}: {max_retries} attempts failed") from last
-
-    def _pages_dir(self, window: DayWindow) -> Iterator[list[dict]]:
-        root = Path(self.options["dir_url"]) / self.options["endpoint"] / window.lo
-        if not root.is_dir():
-            return
-        for page in sorted(root.glob("page*.json")):
-            yield json.loads(page.read_text()).get("data", [])
-
-    # -- read ---------------------------------------------------------
     def read(self, partition: DayWindow) -> Iterator[tuple]:
-        pages = (
-            self._pages_dir(partition)
-            if "dir_url" in self.options
-            else self._pages_http(partition)
+        records = fetch_window(
+            self._fetcher(),
+            self.options["endpoint"],
+            dt.date.fromisoformat(partition.lo),
+            dt.date.fromisoformat(partition.hi),
+            int(self.options.get("page_size", "100")),
         )
-        for page in pages:
-            for record in page:
-                flat = _flatten(record)
-                yield tuple(
-                    None if flat.get(n) is None else str(flat.get(n))
-                    for n in self.names
-                )
+        for flat in records:
+            yield tuple(
+                None if flat.get(n) is None else str(flat.get(n)) for n in self.names
+            )
 
 
 class _StreamReader(SimpleDataSourceStreamReader):
@@ -194,31 +155,23 @@ class _StreamReader(SimpleDataSourceStreamReader):
         bound = self._bound()
         if day >= bound:
             return iter(()), start  # caught up: offset unchanged
-        d = dt.date.fromisoformat(day)
         stop = min(
-            dt.date.fromisoformat(bound), d + dt.timedelta(days=self.max_days)
-        )
-        # day-stepped (both transports window per day), materialized as
-        # a list, not a generator: Spark's prefetch cache copy.copy()s
-        # the returned iterator (generators aren't copyable)
-        rows: list[tuple] = []
-        cur = d
-        while cur < stop:
-            nxt = cur + dt.timedelta(days=1)
-            rows.extend(
-                self.inner.read(DayWindow(cur.isoformat(), nxt.isoformat()))
-            )
-            cur = nxt
-        return iter(rows), {"next_day": stop.isoformat()}
+            dt.date.fromisoformat(bound),
+            dt.date.fromisoformat(day) + dt.timedelta(days=self.max_days),
+        ).isoformat()
+        end = {"next_day": stop}
+        # materialized as a list, not a generator: Spark's prefetch
+        # cache copy.copy()s the returned iterator (generators aren't
+        # copyable), and a failed day must fail read() itself
+        return iter(list(self.readBetweenOffsets(start, end))), end
 
     def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
         # deterministic replay for recovery: re-pages [start, end)
-        d = dt.date.fromisoformat(start["next_day"])
-        stop = dt.date.fromisoformat(end["next_day"])
-        while d < stop:
-            nxt = d + dt.timedelta(days=1)
-            yield from self.inner.read(DayWindow(d.isoformat(), nxt.isoformat()))
-            d = nxt
+        for lo, hi in day_windows(
+            dt.date.fromisoformat(start["next_day"]),
+            dt.date.fromisoformat(end["next_day"]),
+        ):
+            yield from self.inner.read(DayWindow(lo.isoformat(), hi.isoformat()))
 
 
 class RestApiDataSource(DataSource):
@@ -230,7 +183,7 @@ class RestApiDataSource(DataSource):
         return "restapi"
 
     def schema(self) -> StructType:
-        names = _load_names(self.options["schema_file"])
+        names = load_ref_schema(self.options["schema_file"])
         return StructType([StructField(n, StringType(), True) for n in names])
 
     def reader(self, schema: StructType) -> _Reader:

@@ -5,6 +5,7 @@ naming, upsert) across all three endpoints with a fake API."""
 from __future__ import annotations
 
 import datetime as dt
+import io
 import json
 
 from outreach_etl_tool_spark.cli import run_replication
@@ -127,6 +128,61 @@ def test_cli_previous_day_window(spark, tmp_path):
     )
     # only the 03-02 row is in [today-1, today)
     assert results["t_prospects"] == 1
+
+
+def test_http_fetcher_follows_absolute_next_link(monkeypatch):
+    """The CLI's OAuth fetcher pages a real JSON-API window: page 1 is
+    the endpoint URL with the window querystring, and page 2 is the
+    absolute ``links.next`` GET byte for byte (not re-encoded as a
+    ``page[next]`` param on the base URL, which the API would answer
+    with page 1's link again). Token POST and page GETs are faked."""
+    import urllib.request
+
+    import requests
+
+    from outreach_etl_tool_spark import cli
+    from outreach_etl_tool_spark.ingest import rest
+
+    link = f"{cli.API_BASE}/prospects?page%5Bsize%5D=2&page%5Bafter%5D=eyJpZCI6Mn0%3D"
+    bodies = [
+        {"data": [resource("prospects", 1, "2024-03-01"),
+                  resource("prospects", 2, "2024-03-01")],
+         "links": {"next": link}, "meta": {"count": 3}},
+        {"data": [resource("prospects", 3, "2024-03-01")], "links": {}},
+    ]
+    gets = []
+
+    def urlopen(req, timeout=None):
+        gets.append((req.full_url, req.get_header("Authorization")))
+        if len(gets) > len(bodies):
+            raise AssertionError(f"unexpected GET {req.full_url}")
+        return io.BytesIO(json.dumps(bodies[len(gets) - 1]).encode())
+
+    class TokenResponse:
+        def raise_for_status(self):
+            pass
+
+        def json(self):
+            return {"access_token": "tok-1", "expires_in": 7200}
+
+    def no_requests_get(*args, **kwargs):
+        raise AssertionError("page GETs must go through the urllib transport")
+
+    monkeypatch.setattr(urllib.request, "urlopen", urlopen)
+    monkeypatch.setattr(requests, "post", lambda *a, **k: TokenResponse())
+    monkeypatch.setattr(requests, "get", no_requests_get)
+    config = {"client_id": "c", "client_secret": "s",
+              "refresh_token": "r", "redirect_uri": "u"}
+    recs = rest.fetch_window(
+        cli.make_http_fetcher(config), "prospects",
+        dt.date(2024, 3, 1), dt.date(2024, 3, 2), page_size=2,
+    )
+    assert [r["id"] for r in recs] == [1, 2, 3]
+    assert len(gets) == 2
+    assert gets[0][0].startswith(f"{cli.API_BASE}/prospects?")
+    assert "filter%5BupdatedAt%5D=2024-03-01..2024-03-01" in gets[0][0]
+    assert gets[1][0] == link
+    assert {auth for _, auth in gets} == {"Bearer tok-1"}
 
 
 def test_cli_list_and_query_subcommands(spark, capsys):

@@ -3,6 +3,7 @@ transport, flatten parity, schema contract, typed finish."""
 
 from __future__ import annotations
 
+import io
 import json
 
 import pytest
@@ -270,39 +271,41 @@ class _CallCap(BaseException):
     fails instead of hanging."""
 
 
+def _reader(**transport):
+    """A one-day ``prospects`` batch reader over ``base_url`` or ``dir_url``."""
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from outreach_etl_tool_spark.sources.restapi import _Reader
+
+    schema = StructType([StructField(n, StringType(), True) for n in SCHEMA])
+    options = {"endpoint": "prospects", "start": "2024-03-01", "end": "2024-03-02"}
+    return _Reader(schema, {**options, **transport})
+
+
 def test_restapi_repeated_next_link_raises_fetch_error(monkeypatch):
     """An API that keeps returning the same ``links.next`` must make
     the HTTP transport fail loudly with ``FetchError`` naming the
     endpoint and the repeated link, not page forever (the ingest
     path's ``fetch_window`` contract, held by the DataSource too)."""
-    from pyspark.sql.types import StringType, StructField, StructType
+    import urllib.request
 
     from outreach_etl_tool_spark.ingest.rest import FetchError
-    from outreach_etl_tool_spark.sources.restapi import DayWindow, _Reader
+    from outreach_etl_tool_spark.sources.restapi import DayWindow
 
     loop = "http://api.test/prospects?page%5Bnext%5D=c1"
     calls = {"n": 0}
 
-    def same_next(url, token, max_retries=3):
+    def same_next(req, timeout=None):
         calls["n"] += 1
         if calls["n"] > 20:
             raise _CallCap(f"{calls['n']} GETs")
-        return {
+        return io.BytesIO(json.dumps({
             "data": [{"id": calls["n"], "attributes": {"name": "x"}}],
             "links": {"next": loop},
-        }
+        }).encode())
 
-    monkeypatch.setattr(_Reader, "_http_get", staticmethod(same_next))
-    schema = StructType([StructField(n, StringType(), True) for n in SCHEMA])
-    reader = _Reader(
-        schema,
-        {
-            "endpoint": "prospects",
-            "base_url": "http://api.test",
-            "start": "2024-03-01",
-            "end": "2024-03-02",
-        },
-    )
+    monkeypatch.setattr(urllib.request, "urlopen", same_next)
+    reader = _reader(base_url="http://api.test")
     with pytest.raises(FetchError, match="prospects.*repeated") as err:
         list(reader.read(DayWindow("2024-03-01", "2024-03-02")))
     assert loop in str(err.value)
@@ -315,12 +318,59 @@ def test_restapi_http_get_exhausted_retries_raise_fetch_error(monkeypatch):
     import urllib.request
 
     from outreach_etl_tool_spark.ingest.rest import FetchError
-    from outreach_etl_tool_spark.sources.restapi import _Reader
+    from outreach_etl_tool_spark.sources.restapi import DayWindow
 
     def refuse(req, timeout=None):
         raise ConnectionRefusedError("refused")
 
     monkeypatch.setattr(urllib.request, "urlopen", refuse)
+    reader = _reader(base_url="http://api.test")
     with pytest.raises(FetchError, match="3 attempts failed") as err:
-        _Reader._http_get("http://api.test/prospects", "")
+        list(reader.read(DayWindow("2024-03-01", "2024-03-02")))
     assert isinstance(err.value.__cause__, ConnectionRefusedError)
+
+
+@pytest.mark.parametrize(
+    "code, gets", [(400, 1), (403, 1), (404, 1), (408, 3), (429, 3), (503, 3)]
+)
+def test_restapi_http_permanent_errors_fail_at_once(monkeypatch, code, gets):
+    """A 4xx other than 408/429 is permanent: one GET, then
+    ``FetchError``. 408, 429 and 5xx are transient and use the whole
+    retry budget (3) before ``FetchError``. Either way the
+    ``HTTPError`` is the cause."""
+    import urllib.error
+    import urllib.request
+
+    from outreach_etl_tool_spark.ingest.rest import FetchError
+    from outreach_etl_tool_spark.sources.restapi import DayWindow
+
+    urls = []
+
+    def fail(req, timeout=None):
+        urls.append(req.full_url)
+        raise urllib.error.HTTPError(req.full_url, code, "status", {}, None)
+
+    monkeypatch.setattr(urllib.request, "urlopen", fail)
+    reader = _reader(base_url="http://api.test")
+    with pytest.raises(FetchError, match="prospects") as err:
+        list(reader.read(DayWindow("2024-03-01", "2024-03-02")))
+    assert len(urls) == gets
+    assert isinstance(err.value.__cause__, urllib.error.HTTPError)
+    assert err.value.__cause__.code == code
+
+
+def test_restapi_dir_transport_reads_pages_in_numeric_order(tmp_path):
+    """The ``dir_url`` replay transport reads ``page0`` … ``page11`` of
+    a day in numeric order (``page10`` after ``page9``, not after
+    ``page1``), every record exactly once."""
+    from outreach_etl_tool_spark.sources.restapi import DayWindow
+
+    day = tmp_path / "api" / "prospects" / "2024-03-01"
+    day.mkdir(parents=True)
+    for n in range(12):
+        page = [{"id": 10 * n + i, "attributes": {"name": f"p{n}"}} for i in range(3)]
+        (day / f"page{n}.json").write_text(json.dumps({"data": page}))
+    reader = _reader(dir_url=str(tmp_path / "api"))
+    rows = list(reader.read(DayWindow("2024-03-01", "2024-03-02")))
+    assert [r[0] for r in rows] == [str(10 * n + i) for n in range(12) for i in range(3)]
+    assert [r[2] for r in rows] == [f"p{n}" for n in range(12) for _ in range(3)]

@@ -42,7 +42,7 @@ SURVEY_IDS = {
 
 # ids fulfilled outside the registry (modules + tests instead of queries)
 MODULE_COVERAGE = {
-    "S1": "sources/restapi.py (Python DataSource: partition-per-day batch + day-offset streaming tail) + ingest/rest.py (bug-fixed sync driver); tests/test_sources.py, tests/test_ingest.py",
+    "S1": "ingest/rest.py (the one REST extract: fetch_window pager + repeated-cursor guard, _fetch_retry with permanent 4xx failing at once, day_windows, HttpFetcher urllib transport; bug-fixed sync driver) run by sources/restapi.py (Python DataSource: partition-per-day batch + day-offset streaming tail, base_url or dir_url replay fetcher) and the CLI's OAuth fetcher; tests/test_sources.py, tests/test_ingest.py, tests/test_cli.py",
     "S2": "ingest/schema_loader.py empty_frame (tests/test_ingest.py)",
     "S3": "ingest/schema_loader.py load_ref_schema (tests/test_ingest.py)",
     "S4": "sinks/writers.py BigQuerySink (connector-gated stub; tests/test_sinks.py)",
