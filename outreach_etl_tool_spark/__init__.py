@@ -11,8 +11,9 @@ Design principles (see SURVEY.md):
   Tungsten + AQE choose physical strategy.
 - Explicit StructType schemas everywhere (the reference's
   schema-declared model, SURVEY.md §1.1) — never infer on core tables.
-- Keep nested data nested (struct/array/map); flattening is an
-  *operator* (`ingest.flatten`), not an ingestion requirement.
+- The JSON-API ingest flattens each record once, at the fetch
+  (`ingest.flatten.flatten_record`), to the reference's declared
+  flat layout.
 - UDFs are the slow path: built-in/higher-order functions first,
   Arrow-batched pandas UDFs where Python is unavoidable.
 """

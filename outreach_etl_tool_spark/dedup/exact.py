@@ -24,14 +24,3 @@ def dedup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") 
         .drop("__h")
     )
 
-
-def deduplicate(df: DataFrame, text_col: str = "text", id_col: str = "id") -> DataFrame:
-    """Return df with exact-duplicate texts removed (keeps min id)."""
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy(F.sha2(F.col(text_col), 256)).orderBy(id_col)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )

@@ -137,19 +137,3 @@ def build_bloom_distributed(
         bits[idxs] = vals.view(np.uint64)
     return Bloom(bits=bits, m=m, k=k)
 
-
-def build_bloom(items: list[str], fpp: float = 0.01) -> Bloom:
-    """Size for ``fpp`` at len(items): m = −n·ln(fpp)/ln²2, k = m/n·ln2."""
-    n = max(len(items), 1)
-    m = int(np.ceil(-n * np.log(fpp) / (np.log(2) ** 2)))
-    m = max(64, (m + 63) // 64 * 64)
-    k = max(1, int(round(m / n * np.log(2))))
-    bits = np.zeros(m // 64, dtype=np.uint64)
-    if items:
-        h1, h2 = _fnv_pair(items)
-        for i in range(k):
-            idx = (h1 + np.uint64(i) * h2) % np.uint64(m)
-            word = (idx >> np.uint64(6)).astype(np.int64)
-            bit = np.uint64(1) << (idx & np.uint64(63))
-            np.bitwise_or.at(bits, word, bit)
-    return Bloom(bits=bits, m=m, k=k)

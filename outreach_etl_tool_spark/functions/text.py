@@ -75,16 +75,6 @@ def punct_ratio(text: Column | str) -> Column:
     return F.try_divide(F.length(stripped).cast("double"), F.length(c))
 
 
-def stopword_ratio(text: Column | str, lang: str = "en") -> Column:
-    sw = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
-
-    def _build(toks: Column) -> Column:
-        n_sw = F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
-        return F.try_divide(n_sw.cast("double"), F.size(toks))
-
-    return bind_once(tokens(text), _build)
-
-
 def quality_score(text: Column | str) -> Column:
     """Composite [0,1] quality heuristic: length band + low punctuation +
     sane mean token length. Mirrors the length/punct/stopword family of

@@ -1,17 +1,12 @@
-"""Ingestion layer: JSON-API flattening, reference-schema loading, and
-the paginated REST sync re-expressed as a (distributable) batch driver.
+"""Ingestion layer: per-record JSON-API flattening (``flatten_record``,
+the one flatten on the data plane), reference-schema loading, and the
+paginated REST sync re-expressed as a (distributable) batch driver.
 
 Reference parity surface (SURVEY.md §2.1 S1-S3, §2.8 F8, §3.1-3.3),
 minus the reference's four replication bugs (SURVEY.md §2.12).
 """
 
-from .flatten import (
-    array_sizes_of,
-    flatten_df,
-    flatten_record,
-    flatten_schema_names,
-    unflatten_schema,
-)
+from .flatten import flatten_record
 from .schema_loader import (
     coerce_types,
     empty_frame,
@@ -20,11 +15,7 @@ from .schema_loader import (
 )
 
 __all__ = [
-    "array_sizes_of",
-    "flatten_df",
     "flatten_record",
-    "flatten_schema_names",
-    "unflatten_schema",
     "load_ref_schema",
     "ref_schema_to_struct",
     "empty_frame",

@@ -10,27 +10,19 @@ Naming contract (golden-tested against /root/reference/schemas/*.json):
   ``contactHistogram_11_1``;
 - only leaves emit columns; the trailing separator is stripped.
 
-Two implementations of the same contract:
-
-- :func:`flatten_record` — plain-Python, per-record (driver-side
-  control plane: page parsing, golden tests). Exactly mirrors the
-  reference's recursion.
-- :func:`flatten_df` — the Spark *operator*: takes a DataFrame whose
-  columns may be struct/array (the engine keeps data nested,
-  SURVEY.md §1.1) and projects the flat layout in one `select` — pure
-  Catalyst expressions (GetStructField / GetArrayItem), no UDF, no
-  shuffle, fully codegen'd and column-pruned. Out-of-range list
-  indices yield null, matching the reference's absent-column → NaN
-  semantics (etl_tools.py:41).
+One implementation, :func:`flatten_record`: plain Python, one record
+at a time, mirroring the reference's recursion. It is the data plane
+(``rest.fetch_window`` flattens every fetched record with it, then
+``rest._records_to_pdf`` aligns the records to the declared columns,
+absent names → null) and the golden reference the tests pin. There
+is no Catalyst form: flattening plus alignment is a few percent of a
+sync's wall time, so moving it into the JVM cannot pay for a second
+copy of the contract.
 """
 
 from __future__ import annotations
 
 from typing import Any
-
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 def flatten_record(record: dict[str, Any], sep: str = "_") -> dict[str, Any]:
@@ -50,237 +42,3 @@ def flatten_record(record: dict[str, Any], sep: str = "_") -> dict[str, Any]:
     walk(record, "")
     return out
 
-
-_DEFAULT_ITEMS = 2
-
-
-def _limit_for(path: str, array_limits: dict[str, int] | None, default: int) -> int:
-    if array_limits and path in array_limits:
-        return array_limits[path]
-    return default
-
-
-def _map_parent(path: str) -> str:
-    """Emitted-name prefix for a map's declared keys: the map FIELD
-    name is dropped — the open blocks it models (``custom1..custom55``,
-    schemas/prospects.json:119-283) are direct keys of their parent
-    object in the API payload; the map container is the engine's
-    modeling artifact, not a path segment the reference ever had."""
-    head, _, _ = path.rpartition("_")
-    return head
-
-
-def _flatten_col(
-    col: Column,
-    dtype: T.DataType,
-    path: str,
-    array_limits: dict[str, int] | None,
-    default_items: int,
-    out: list[Column],
-    map_keys: dict[str, list[str]] | None = None,
-) -> None:
-    if isinstance(dtype, T.StructType):
-        for f in dtype.fields:
-            _flatten_col(
-                col.getField(f.name), f.dataType, f"{path}_{f.name}",
-                array_limits, default_items, out, map_keys,
-            )
-    elif isinstance(dtype, T.ArrayType):
-        n = _limit_for(path, array_limits, default_items)
-        for i in range(n):
-            # F.get is null out of range (ANSI-safe) → the reference's
-            # NaN-for-absent semantics
-            _flatten_col(
-                F.get(col, i), dtype.elementType, f"{path}_{i}",
-                array_limits, default_items, out, map_keys,
-            )
-    elif isinstance(dtype, T.MapType):
-        keys = (map_keys or {}).get(path)
-        if keys is None:
-            # no declared keys → keep the map as-is (queryable via
-            # element_at); SURVEY.md §1.1
-            out.append(col.alias(path))
-        else:
-            parent = _map_parent(path)
-            for key in keys:
-                name = f"{parent}_{key}" if parent else key
-                # element_at on maps is null for absent keys → the
-                # reference's NaN-for-absent semantics
-                _flatten_col(
-                    F.element_at(col, F.lit(key)), dtype.valueType, name,
-                    array_limits, default_items, out, map_keys,
-                )
-    else:
-        out.append(col.alias(path))
-
-
-def flatten_df(
-    df: DataFrame,
-    array_limits: dict[str, int] | None = None,
-    default_items: int = _DEFAULT_ITEMS,
-    map_keys: dict[str, list[str]] | None = None,
-    shadow_cols: dict[str, str] | None = None,
-) -> DataFrame:
-    """Project every nested column to the reference's flat layout.
-
-    ``array_limits`` maps a flattened path prefix (e.g.
-    ``"attributes_emails"``) to the number of positional columns to
-    emit; unlisted arrays emit ``default_items``. ``map_keys`` maps a
-    MapType column's path to its declared keys; each key becomes a
-    ``{parent}_{key}`` column (the map field name is dropped — see
-    :func:`_map_parent`), absent keys null. Maps without declared keys
-    pass through unflattened. ``shadow_cols`` ({name: dtype_name})
-    emits always-null typed columns for declared names that are also
-    nested paths (see :func:`unflatten_schema`).
-    """
-    from ..ingest.schema_loader import _TYPE_MAP
-
-    cols: list[Column] = []
-    for f in df.schema.fields:
-        _flatten_col(F.col(f.name), f.dataType, f.name, array_limits,
-                     default_items, cols, map_keys)
-    for name, dtype in (shadow_cols or {}).items():
-        cols.append(F.lit(None).cast(_TYPE_MAP[dtype]).alias(name))
-    return df.select(*cols)
-
-
-def flatten_schema_names(
-    schema: T.StructType,
-    array_limits: dict[str, int] | None = None,
-    default_items: int = _DEFAULT_ITEMS,
-    map_keys: dict[str, list[str]] | None = None,
-) -> list[str]:
-    """The flat column names :func:`flatten_df` would produce."""
-    names: list[str] = []
-
-    def walk(dtype: T.DataType, path: str) -> None:
-        if isinstance(dtype, T.StructType):
-            for f in dtype.fields:
-                walk(f.dataType, f"{path}_{f.name}" if path else f.name)
-        elif isinstance(dtype, T.ArrayType):
-            for i in range(_limit_for(path, array_limits, default_items)):
-                walk(dtype.elementType, f"{path}_{i}")
-        elif isinstance(dtype, T.MapType):
-            keys = (map_keys or {}).get(path)
-            if keys is None:
-                names.append(path)
-            else:
-                parent = _map_parent(path)
-                for key in keys:
-                    walk(dtype.valueType,
-                         f"{parent}_{key}" if parent else key)
-        else:
-            names.append(path)
-
-    for f in schema.fields:
-        walk(f.dataType, f.name)
-    return names
-
-
-def unflatten_schema(
-    flat: dict[str, str],
-    map_blocks: dict[str, tuple[str, str]] | None = None,
-) -> tuple[T.StructType, dict[str, str]]:
-    """Nested StructType from a flat {column: dtype} contract — the
-    inverse of :func:`flatten_schema_names`, used to rebuild the
-    engine's nested data model (SURVEY.md §1.1) from a declared sink
-    layout so the round-trip nested → flat is testable from repo-local
-    files alone.
-
-    Rules: ``_`` splits path segments; an all-digit segment is an array
-    position (sized max+1, elements merged across positions);
-    ``map_blocks`` maps a parent path to ``(field_name, key_regex)`` —
-    leaf children of that parent whose name matches the regex collapse
-    into one ``MapType(string, <merged value type>)`` field planted at
-    the first matching child's position (e.g. ``{"attributes":
-    ("custom", r"custom\\d+")}`` folds ``attributes_custom1..55`` into
-    ``attributes.custom``).
-
-    Returns ``(schema, shadows)``. ``shadows`` are declared columns
-    whose name is ALSO a nested path (the reference declares e.g.
-    ``relationships_creator_data`` — the scalar null residue of an
-    absent JSON-API relation — alongside ``..._data_id``): a name
-    cannot be both a struct and a scalar, so these ride along as
-    always-null typed columns that :func:`flatten_df` re-emits via its
-    ``shadow_cols`` parameter.
-    """
-    import re
-
-    from ..ingest.schema_loader import _TYPE_MAP
-
-    trie: dict = {}
-    shadows: dict[str, str] = {}
-    for name, dtype in flat.items():
-        node = trie
-        segs = name.split("_")
-        conflict = False
-        for i, seg in enumerate(segs[:-1]):
-            nxt = node.get(seg)
-            if isinstance(nxt, str):
-                # existing leaf is a prefix of this deeper column: the
-                # leaf becomes a shadow, the path deepens into a dict
-                shadows["_".join(segs[: i + 1])] = nxt
-                nxt = node[seg] = {}
-            elif nxt is None:
-                nxt = node[seg] = {}
-            node = nxt
-        if isinstance(node.get(segs[-1]), dict):
-            shadows[name] = dtype  # deeper columns already claimed it
-            conflict = True
-        if not conflict:
-            node[segs[-1]] = dtype
-
-    def build(node: dict, path: str) -> T.DataType:
-        if isinstance(node, str):
-            return _TYPE_MAP[node]
-        if node and all(k.isdigit() for k in node):
-            size = max(int(k) for k in node) + 1
-            merged: dict = {}
-            for k in sorted(node, key=int):
-                child = node[k]
-                if isinstance(child, str):
-                    return T.ArrayType(_TYPE_MAP[child])
-                for ck, cv in child.items():
-                    merged.setdefault(ck, cv)
-            _ = size  # size is a flatten-time limit; ArrayType is unsized
-            return T.ArrayType(build(merged, path))
-        block = (map_blocks or {}).get(path)
-        fields: list[T.StructField] = []
-        map_leaves: dict[str, str] = {}
-        map_planted = False
-        for key, child in node.items():
-            if block and isinstance(child, str) and re.fullmatch(block[1], key):
-                map_leaves[key] = child
-                if not map_planted:
-                    map_planted = True
-                    fields.append(None)  # placeholder keeps position
-                continue
-            sub = f"{path}_{key}" if path else key
-            fields.append(T.StructField(key, build(child, sub), True))
-        if map_leaves:
-            value_types = set(map_leaves.values())
-            if len(value_types) != 1:
-                raise ValueError(
-                    f"map block at {path!r} mixes value types {value_types}"
-                )
-            mt = T.MapType(T.StringType(), _TYPE_MAP[value_types.pop()], True)
-            idx = fields.index(None)
-            fields[idx] = T.StructField(block[0], mt, True)
-        return T.StructType(fields)
-
-    top = build(trie, "")
-    assert isinstance(top, T.StructType)
-    return top, shadows
-
-
-def array_sizes_of(flat: dict[str, str] | list[str]) -> dict[str, int]:
-    """Flatten-time ``array_limits`` recovered from a flat layout: for
-    every path whose children are positional, the max index + 1."""
-    sizes: dict[str, int] = {}
-    for name in flat:
-        segs = name.split("_")
-        for i, seg in enumerate(segs):
-            if seg.isdigit():
-                prefix = "_".join(segs[:i])
-                sizes[prefix] = max(sizes.get(prefix, 0), int(seg) + 1)
-    return sizes

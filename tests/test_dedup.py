@@ -40,17 +40,18 @@ def test_exact_dedup_groups(spark, docs):
     assert got == {(1, 2), (2, 1), (3, 1)}
 
 
-def test_exact_deduplicate_keeps_min_id(spark, docs):
-    out = exact.deduplicate(docs, "text", "doc_id")
-    assert {r["doc_id"] for r in out.collect()} == {1, 2, 3}
-
-
 def test_exact_dedup_idempotent(spark, docs):
-    once = exact.deduplicate(docs, "text", "doc_id")
-    twice = exact.deduplicate(once, "text", "doc_id")
-    assert sorted(r["doc_id"] for r in twice.collect()) == sorted(
-        r["doc_id"] for r in once.collect()
+    """Running dedup_groups over the rows it kept finds no duplicates
+    left: every kept text is its own group of one."""
+    once = exact.dedup_groups(docs, "text", "doc_id")
+    kept = docs.join(
+        once.select(F.col("keep_id").alias("doc_id")), "doc_id", "left_semi"
     )
+    twice = exact.dedup_groups(kept, "text", "doc_id").collect()
+    assert sorted(r["keep_id"] for r in twice) == sorted(
+        r["keep_id"] for r in once.collect()
+    )
+    assert all(r["n_copies"] == 1 for r in twice)
 
 
 # ------------------------------------------------------------ MinHash

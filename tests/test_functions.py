@@ -33,13 +33,6 @@ def test_punct_ratio(spark):
     assert one(df.select(TXT.punct_ratio("t").alias("p")))["p"] == pytest.approx(0.5)
 
 
-def test_stopword_ratio(spark):
-    df = spark.createDataFrame([("the cat and the hat",)], "t string")
-    # the, and, the = 3 stopwords of 5 tokens
-    r = one(df.select(TXT.stopword_ratio("t").alias("r")))
-    assert r["r"] == pytest.approx(3 / 5)
-
-
 def test_lang_id_on_clear_samples(spark):
     samples = [
         ("the quick fox and the dog ran to it", "en"),
@@ -124,19 +117,6 @@ def test_bound_to_micros_is_exact():
 
 
 # ----------------------------------------------------------- bloom filter
-def test_bloom_no_false_negatives_and_low_fpp():
-    import numpy as np
-
-    from outreach_etl_tool_spark.functions.bloom import build_bloom
-
-    members = [f"gram number {i} payload" for i in range(2000)]
-    outsiders = [f"other text {i} entirely" for i in range(4000)]
-    b = build_bloom(members, fpp=0.01)
-    assert b.contains(members).all()  # zero false negatives, always
-    fp = float(np.mean(b.contains(outsiders)))
-    assert fp < 0.03, fp  # sized for 1%; allow slack
-
-
 def test_bloom_distributed_build_matches_semantics(spark):
     """Distributed construction (partition-local bit arrays OR-merged
     via bit_or agg; driver sees only the final words) preserves the
@@ -159,13 +139,15 @@ def test_bloom_distributed_build_matches_semantics(spark):
     assert fp < 0.03, fp
 
 
-def test_bloom_empty_and_tiny():
-    from outreach_etl_tool_spark.functions.bloom import build_bloom
+def test_bloom_empty_and_tiny(spark):
+    from outreach_etl_tool_spark.functions.bloom import build_bloom_distributed
 
-    b = build_bloom([])
+    b = build_bloom_distributed(spark.createDataFrame([], "gram string"))
     assert not b.contains(["anything"]).any()
     assert b.contains([]).shape == (0,)
-    tiny = build_bloom(["only one"])
+    tiny = build_bloom_distributed(
+        spark.createDataFrame([("only one",)], "gram string")
+    )
     assert tiny.contains(["only one"]).all()
 
 

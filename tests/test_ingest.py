@@ -13,9 +13,7 @@ from pyspark.sql import functions as F
 from outreach_etl_tool_spark.ingest import (
     coerce_types,
     empty_frame,
-    flatten_df,
     flatten_record,
-    flatten_schema_names,
     load_ref_schema,
     ref_schema_to_struct,
 )
@@ -76,34 +74,6 @@ def test_flatten_names_are_reference_schema_columns():
             for j in range(2)} <= set(flat)
 
 
-def test_flatten_df_matches_flatten_record(spark):
-    """The Spark operator and the per-record flattener produce the same
-    layout for the same nested value."""
-    df = spark.createDataFrame(
-        [((["a@x.com", "b@x.com"], "Ada"), 1)],
-        "attributes struct<emails: array<string>, firstName: string>, id long",
-    )
-    out = flatten_df(df, array_limits={"attributes_emails": 2})
-    assert out.columns == ["attributes_emails_0", "attributes_emails_1",
-                           "attributes_firstName", "id"]
-    row = out.collect()[0]
-    assert row["attributes_emails_0"] == "a@x.com"
-    assert row["attributes_firstName"] == "Ada"
-
-
-def test_flatten_df_out_of_range_index_is_null(spark):
-    df = spark.createDataFrame([(["only-one"],)], "emails array<string>")
-    row = flatten_df(df, default_items=3).collect()[0]
-    assert row["emails_0"] == "only-one"
-    assert row["emails_1"] is None and row["emails_2"] is None
-
-
-def test_flatten_schema_names_nested_matrix(spark):
-    df = spark.createDataFrame([([[1, 2]],)], "m array<array<int>>")
-    names = flatten_schema_names(df.schema, array_limits={"m": 2, "m_0": 2, "m_1": 2})
-    assert names == ["m_0_0", "m_0_1", "m_1_0", "m_1_1"]
-
-
 # -------------------------------------------------- schema loader parity
 WIDTHS = (("prospects", 207), ("sequences", 90), ("mailings", 68))
 
@@ -137,74 +107,6 @@ def test_repo_schemas_match_reference_key_for_key():
         ref = load_ref_schema(f"{REF_SCHEMAS}/{endpoint}.json")
         mine = load_ref_schema(repo_dir / f"{endpoint}.json")
         assert mine == ref, endpoint
-
-
-# ------------------------------------ nested model ⇄ flat layout roundtrip
-_MAP_BLOCKS = {"prospects": {"attributes": ("custom", r"custom\d+")}}
-
-
-def _roundtrip_parts(endpoint: str):
-    import outreach_etl_tool_spark as pkg
-    from outreach_etl_tool_spark.ingest.flatten import (
-        array_sizes_of,
-        unflatten_schema,
-    )
-
-    flat = load_ref_schema(Path(pkg.__file__).parent / "schemas" / f"{endpoint}.json")
-    blocks = _MAP_BLOCKS.get(endpoint)
-    nested, shadows = unflatten_schema(flat, blocks)
-    map_keys = None
-    if blocks:
-        map_keys = {
-            "attributes_custom": [
-                c.removeprefix("attributes_")
-                for c in flat
-                if c.startswith("attributes_custom")
-                and c.removeprefix("attributes_custom").isdigit()
-            ]
-        }
-    return flat, nested, shadows, array_sizes_of(flat), map_keys
-
-
-@pytest.mark.parametrize("endpoint", ["prospects", "sequences", "mailings"])
-def test_full_flat_layout_roundtrip(endpoint):
-    """From repo-local files alone: rebuild the nested model
-    (StructType/ArrayType/MapType per SURVEY §1.1), then flatten —
-    every declared sink column must come back, including the
-    custom1..55 MapType block and the 12×2 contactHistogram matrix."""
-    flat, nested, shadows, limits, map_keys = _roundtrip_parts(endpoint)
-    names = flatten_schema_names(nested, array_limits=limits,
-                                 map_keys=map_keys) + sorted(shadows)
-    assert sorted(names) == sorted(flat)
-
-
-def test_full_flat_layout_executes(spark):
-    """flatten_df actually projects the full prospects layout (207
-    columns, map keys via element_at, null-safe positions) in Spark."""
-    flat, nested, shadows, limits, map_keys = _roundtrip_parts("prospects")
-    df = spark.createDataFrame([], nested)
-    out = flatten_df(df, array_limits=limits, map_keys=map_keys,
-                     shadow_cols=shadows)
-    assert sorted(out.columns) == sorted(flat)
-    assert out.count() == 0
-
-
-def test_flatten_map_block_values(spark):
-    """Declared-key map expansion: present keys surface, absent keys
-    null, and the container name is dropped from the column name."""
-    df = spark.createDataFrame(
-        [(({"custom1": "a", "custom3": "c"},),)],
-        schema="attributes struct<custom: map<string,string>>",
-    )
-    out = flatten_df(
-        df, map_keys={"attributes_custom": ["custom1", "custom2", "custom3"]}
-    )
-    assert out.columns == [
-        "attributes_custom1", "attributes_custom2", "attributes_custom3"
-    ]
-    row = out.collect()[0]
-    assert (row["attributes_custom1"], row["attributes_custom2"],
-            row["attributes_custom3"]) == ("a", None, "c")
 
 
 def test_coerce_types(spark):
@@ -369,6 +271,93 @@ def test_sync_large_goes_distributed_and_upserts(spark):
     out = df.collect()
     assert sorted(r["id"] for r in out) == [0, 1, 2, 3, 4, 5]
     assert all(r["attributes_updatedAt"].day == 2 for r in out)
+
+
+# Declared layout for the golden flatten test: nested dicts, a list
+# declared three positions wide, a nested null, booleans, floats, and
+# booleans/floats landing in string columns (Python's str() is the
+# contract there: "False", "1e+16").
+GOLDEN_SCHEMA = {
+    "id": "integer",
+    "attributes_updatedAt": "datetime",
+    "attributes_name_first": "string",
+    "attributes_name_last": "string",
+    "attributes_emails_0": "string",
+    "attributes_emails_1": "string",
+    "attributes_emails_2": "string",
+    "attributes_score": "float",
+    "attributes_big": "float",
+    "attributes_bigText": "string",
+    "attributes_optedOut": "boolean",
+    "attributes_flagText": "string",
+    "attributes_owner_id": "integer",
+    "attributes_count": "integer",
+}
+
+
+def golden_rows() -> list[dict]:
+    rows = []
+    for i in range(6):
+        day = "2024-03-01" if i < 3 else "2024-03-02"
+        rows.append({
+            "id": i,
+            "type": "prospect",  # not declared: dropped
+            "attributes": {
+                "updatedAt": f"{day}T00:00:{i:02d}",
+                "name": {"first": f"Ada{i}", "last": None},
+                "emails": [f"a{i}@x.com"] + ([f"b{i}@x.com"] if i % 2 else []),
+                "score": 0.1,
+                "big": 1e16,
+                "bigText": 1e16,
+                "optedOut": i % 2 == 0,
+                "flagText": i % 2 == 1,
+                "owner": None if i % 3 else {"id": 40 + i},
+                "count": i * 7,
+                "unknownField": {"deep": [1, 2]},  # not declared: dropped
+            },
+        })
+    return rows
+
+
+@pytest.mark.parametrize("large_threshold", [10_000, 1],
+                         ids=["whole_window", "distributed"])
+def test_sync_flatten_golden_values(spark, large_threshold):
+    """Both sync paths produce exactly the declared columns, in order,
+    and every value is flatten_record → str() → coerce_types for that
+    column: absent list positions and nested nulls are null, undeclared
+    fields are dropped."""
+    rows = golden_rows()
+    names = list(GOLDEN_SCHEMA)
+    df = rest.sync_endpoint(
+        spark, make_fake_api(rows, page_size_cap=2), "prospects", GOLDEN_SCHEMA,
+        dt.date(2024, 3, 1), dt.date(2024, 3, 3), large_threshold=large_threshold,
+    )
+    assert df.columns == names
+
+    strings = []
+    for rec in rows:
+        flat = flatten_record(rec)
+        strings.append(tuple(
+            None if flat.get(n) is None else str(flat[n]) for n in names
+        ))
+    want_df = coerce_types(
+        spark.createDataFrame(strings, ", ".join(f"`{n}` string" for n in names)),
+        GOLDEN_SCHEMA,
+    )
+    assert df.schema == want_df.schema
+    got = {r["id"]: r.asDict() for r in df.collect()}
+    want = {r["id"]: r.asDict() for r in want_df.collect()}
+    assert got == want
+
+    r0, r1 = got[0], got[1]
+    assert (r0["attributes_emails_1"], r0["attributes_emails_2"]) == (None, None)
+    assert r1["attributes_emails_1"] == "b1@x.com"
+    assert r0["attributes_name_last"] is None
+    assert (r0["attributes_owner_id"], r1["attributes_owner_id"]) == (40, None)
+    assert (r0["attributes_optedOut"], r1["attributes_optedOut"]) == (True, False)
+    assert (r0["attributes_flagText"], r1["attributes_flagText"]) == ("False", "True")
+    assert (r0["attributes_score"], r0["attributes_big"]) == (0.1, 1e16)
+    assert r0["attributes_bigText"] == "1e+16"
 
 
 def test_replication_window_modes():

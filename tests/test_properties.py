@@ -61,11 +61,21 @@ def test_flatten_flat_input_is_identity(rec):
 def test_dedup_idempotent_and_order_free(spark):
     rows = [(i, f"text-{i % 7}") for i in range(50)]
     df = spark.createDataFrame(rows, "id long, text string")
-    once = exact.deduplicate(df, "text", "id")
-    twice = exact.deduplicate(once, "text", "id")
-    got_once = sorted(r["id"] for r in once.collect())
-    got_twice = sorted(r["id"] for r in twice.collect())
-    assert got_once == got_twice == [0, 1, 2, 3, 4, 5, 6]
+
+    def groups(frame):
+        return sorted(
+            (r["keep_id"], r["n_copies"])
+            for r in exact.dedup_groups(frame, "text", "id").collect()
+        )
+
+    once = groups(df)
+    assert [k for k, _ in once] == [0, 1, 2, 3, 4, 5, 6]
+    assert sum(n for _, n in once) == 50
+    assert groups(df.repartition(7)) == once
+    kept = df.join(
+        spark.createDataFrame([(k,) for k, _ in once], "id long"), "id", "left_semi"
+    )
+    assert groups(kept) == [(k, 1) for k, _ in once]
 
 
 def test_union_by_name_alignment(spark):
