@@ -40,6 +40,16 @@ def test_exact_dedup_groups(spark, docs):
     assert got == {(1, 2), (2, 1), (3, 1)}
 
 
+def test_exact_deduplicate_keeps_min_id(spark, docs):
+    """Of each group of identical texts the smallest id is kept: doc 4
+    repeats doc 1's text, so the kept ids are {1, 2, 3}."""
+    groups = exact.dedup_groups(docs, "text", "doc_id")
+    kept = docs.join(
+        groups.select(F.col("keep_id").alias("doc_id")), "doc_id", "left_semi"
+    )
+    assert {r["doc_id"] for r in kept.collect()} == {1, 2, 3}
+
+
 def test_exact_dedup_idempotent(spark, docs):
     """Running dedup_groups over the rows it kept finds no duplicates
     left: every kept text is its own group of one."""

@@ -117,6 +117,22 @@ def test_bound_to_micros_is_exact():
 
 
 # ----------------------------------------------------------- bloom filter
+def test_bloom_no_false_negatives_and_low_fpp(spark):
+    """One partition of distinct members: every member is found and
+    the false-positive rate stays near the 1% it was sized for."""
+    import numpy as np
+
+    from outreach_etl_tool_spark.functions.bloom import build_bloom_distributed
+
+    members = [f"gram number {i} payload" for i in range(2000)]
+    outsiders = [f"other text {i} entirely" for i in range(4000)]
+    df = spark.createDataFrame([(g,) for g in members], "gram string").coalesce(1)
+    b = build_bloom_distributed(df, "gram", fpp=0.01)
+    assert b.contains(members).all()  # zero false negatives, always
+    fp = float(np.mean(b.contains(outsiders)))
+    assert fp < 0.03, fp  # sized for 1%; allow slack
+
+
 def test_bloom_distributed_build_matches_semantics(spark):
     """Distributed construction (partition-local bit arrays OR-merged
     via bit_or agg; driver sees only the final words) preserves the
